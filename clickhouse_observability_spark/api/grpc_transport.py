@@ -23,10 +23,8 @@ dependencies:
   over HTTP/1.1 — POST /logs.v1.LogService/BatchWrite with
   `application/grpc-web+proto` 5-byte-prefixed frames and a trailers
   frame — servable by the stdlib HTTP server and e2e-tested with a
-  plain socket client (this container has no grpcio);
-- `serve_grpc_native`: the HTTP/2 `application/grpc` flavor via
-  grpcio's generic handler, gated behind an import-try so it lights
-  up wherever grpcio exists.
+  plain socket client. The HTTP/2 `application/grpc` flavor stock
+  gRPC clients speak is `api/http2_transport.py` (h2c).
 """
 
 from __future__ import annotations
@@ -321,42 +319,6 @@ def grpc_web_call(host: str, port: int, entries: list[Mapping]) -> int:
     if status != 0:
         raise RuntimeError(f"grpc-status {status}")
     return written
-
-
-# ---------------------------------------------------------------------------
-# native gRPC (HTTP/2) — available wherever grpcio is installed
-# ---------------------------------------------------------------------------
-
-def serve_grpc_native(handler: LogServiceHandler, address: str = "127.0.0.1:8081"):
-    """Plain-gRPC server via grpcio's generic handler (no generated
-    stubs needed — the codec above is the (de)serializer). Gated:
-    this container ships no grpcio, so the call raises with a clear
-    message instead of importing at module load."""
-    try:
-        import grpc
-    except ImportError as e:  # pragma: no cover - env-dependent
-        raise RuntimeError(
-            "grpcio is not installed in this environment; use "
-            "serve_grpc_web (same wire messages over gRPC-Web framing)"
-        ) from e
-
-    def batch_write(request: list[dict], context):  # noqa: ANN001
-        return handler.batch_write(encode_batch_write_request(request))
-
-    rpc = grpc.unary_unary_rpc_method_handler(
-        batch_write,
-        request_deserializer=decode_batch_write_request,
-        response_serializer=lambda b: b,
-    )
-    generic = grpc.method_handlers_generic_handler(
-        "logs.v1.LogService", {"BatchWrite": rpc}
-    )
-    from concurrent import futures
-
-    server = grpc.server(futures.ThreadPoolExecutor(max_workers=4))
-    server.add_generic_rpc_handlers((generic,))
-    server.add_insecure_port(address)
-    return server
 
 
 # ---------------------------------------------------------------------------

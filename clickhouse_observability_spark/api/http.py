@@ -446,15 +446,19 @@ class LogsApi:
             if cached is not None:
                 return 200, cached
         try:
-            df = self._provider()
-            views = {"logs": df}
-            # legacy dot-free spelling kept working; the CH-spelled
-            # `system.parts` / `system.columns` / `system.tables` /
-            # `system.query_log` are rewritten+registered inside
-            # ch_sql itself
-            if self._table is not None and "system_parts" in q:
-                views["system_parts"] = self._table.parts_df()
-            res = ch_sql(df.sparkSession, q, logs=self._table,
+            # an attached table is read by ch_sql itself (`logs=`,
+            # index-pruned where a skip index admits the statement);
+            # the provider's frame stands in only when there is none
+            if self._table is None:
+                df = self._provider()
+                spark, views = df.sparkSession, {"logs": df}
+            else:
+                spark, views = self._table.spark, {}
+                # legacy dot-free spelling kept working; the
+                # CH-spelled `system.parts` etc. bind inside ch_sql
+                if "system_parts" in q:
+                    views["system_parts"] = self._table.parts_df()
+            res = ch_sql(spark, q, logs=self._table,
                          views=views, query_log=self.query_log)
             if isinstance(res, int):
                 return 200, {"inserted": res}

@@ -10,8 +10,14 @@ statements unchanged. `translate()` rewrites the CH function
 vocabulary to Spark SQL expressions (string-literal-safe tokenizer +
 balanced-paren argument parsing, so rewrites recurse through nested
 calls and never touch quoted text), and `ch_sql()` executes the
-result — SELECT/DESCRIBE via `spark.sql` over registered views,
-INSERT via the engine's write path.
+result — SELECT/DESCRIBE via `spark.sql`, INSERT via the engine's
+write path, DDL via the storage layer. Each statement is picked from
+one ordered regex table (`_STATEMENTS`), and the tables it reads are
+bound for that statement alone: registered under view names unique to
+the call, referenced by rewriting the statement's identifiers, and
+dropped once Spark has analyzed it (`_spark_sql`). Concurrent
+statements on one shared session therefore never see each other's
+`logs`, and nothing is left in the session catalog.
 
 Everything stays JVM-side: the output is plain Spark SQL text, so
 the translated query goes through Catalyst/codegen like any native
@@ -30,6 +36,8 @@ from __future__ import annotations
 
 import os
 import re
+import uuid
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -127,7 +135,7 @@ def _dict_bad(sig: str):
 
 def _dict_name(arg: str) -> str:
     """The dictionary name must be a string literal naming a
-    registered view (`ch_sql(views={name: df})`)."""
+    view: a `ch_sql(views={name: df})` entry or a session view."""
     m = re.fullmatch(r"\s*'([A-Za-z_]\w*)'\s*", arg)
     if m is None:
         raise ChDialectError(
@@ -3513,7 +3521,7 @@ def translate(sql: str) -> str:
 # ---------------------------------------------------------------------------
 
 
-def _run_with_fill(spark: SparkSession, fill: dict) -> DataFrame:
+def _run_with_fill(st, fill: dict) -> DataFrame:
     """Execute an extracted WITH FILL statement: translate + run the
     inner SELECT, densify through the gap_fill operator, then apply
     the statement's final order and post-fill LIMIT."""
@@ -3522,7 +3530,7 @@ def _run_with_fill(spark: SparkSession, fill: dict) -> DataFrame:
 
     from clickhouse_observability_spark.operators.gapfill import gap_fill
 
-    df = spark.sql(translate(fill["inner"]))
+    df = _spark_sql(st, fill["inner"])
     axis = fill["axis"]
     for c in (axis, *fill["keys"]):
         if c not in df.columns:
@@ -4110,7 +4118,7 @@ def _extract_asof_join(sql: str):
     }
 
 
-def _run_asof_join(spark: SparkSession, spec: dict) -> DataFrame:
+def _run_asof_join(st, spec: dict) -> DataFrame:
     """Execute an extracted ASOF JOIN: build the joined frame through
     the union-and-carry operator (one key shuffle, no row blowup),
     then rewrite and run the rest of the statement over it. Right
@@ -4120,15 +4128,14 @@ def _run_asof_join(spark: SparkSession, spec: dict) -> DataFrame:
 
     lname, lalias = spec["left"]
     rname, ralias = spec["right"]
-    left_df, right_df = spark.table(lname), spark.table(rname)
+    left_df = _spark_sql(st, f"SELECT * FROM {lname}")
+    right_df = _spark_sql(st, f"SELECT * FROM {rname}")
     prefix = f"{ralias}_"
     joined = asof_join(
         left_df, right_df, spec["keys"], spec["left_ts"],
         spec["right_ts"], direction=spec["direction"],
         strict=spec["strict"], how=spec["how"], right_prefix=prefix,
     )
-    view = "__asof_joined"
-    joined.createOrReplaceTempView(view)
     carry = {c for c in right_df.columns if c not in spec["keys"]}
 
     def dequalify(toks: list[str]) -> list[str]:
@@ -4150,9 +4157,10 @@ def _run_asof_join(spark: SparkSession, spec: dict) -> DataFrame:
             i += 1
         return out
 
-    toks = (dequalify(spec["select_toks"]) + ["FROM", view]
+    toks = (dequalify(spec["select_toks"]) + ["FROM", "__asof_joined"]
             + dequalify(spec["tail_toks"]))
-    return spark.sql(translate(" ".join(toks)))
+    return _spark_sql(st, " ".join(toks),
+                      extra={"__asof_joined": lambda: joined})
 
 
 _OPTIMIZE_RE = re.compile(
@@ -4449,7 +4457,7 @@ def _parse_scalar_aggs(core: list[str]):
         if aggs else None
 
 
-def _route_projection(spark: SparkSession, sql: str, logs):
+def _route_projection(st):
     """Transparent aggregate-projection routing — ClickHouse's
     optimizer behavior for `ADD PROJECTION`: a single-table
     SELECT ... FROM logs ... GROUP BY ... whose dimensions,
@@ -4465,6 +4473,7 @@ def _route_projection(spark: SparkSession, sql: str, logs):
     is enforced by RESOLUTION, not text analysis: the predicate is
     analyzed against a dims-only frame; any reference to a non-dim
     column fails analysis and the router declines."""
+    logs = st.logs
     if logs is None:
         return None
     projs = [v for v in getattr(logs, "materialized_views", [])
@@ -4476,8 +4485,7 @@ def _route_projection(spark: SparkSession, sql: str, logs):
              if v.spec.get("projection") and v.spec.get("covers_table")]
     if not projs:
         return None
-    base, _fmt = split_format_clause(sql)
-    tokens = _tokenize(base)
+    tokens = _tokenize(split_format_clause(st.sql)[0])
     lows = [t.lower() for t in tokens]
     if not tokens or lows[0] != "select":
         return None
@@ -4588,11 +4596,11 @@ def _route_projection(spark: SparkSession, sql: str, logs):
                         # here must fall back, not surface (review r7:
                         # a materialized projection must never make a
                         # query error that worked on the base scan)
-                        view = "__projection_served"
-                        served.createOrReplaceTempView(view)
-                        served = spark.sql(translate(
-                            f"SELECT * FROM {view} " + " ".join(tail)))
-                        served.schema  # force analysis inside the try
+                        served = _spark_sql(
+                            st, "SELECT * FROM __projection_served "
+                            + " ".join(tail),
+                            extra={"__projection_served":
+                                   lambda s=served: s})
                 except Exception:
                     continue  # unresolvable -> next projection / base
                 return served
@@ -4820,44 +4828,27 @@ _SYSTEM_TABLES = ("parts", "columns", "tables", "query_log",
                   "mutations", "projections", "detached_parts",
                   "dropped_tables", "data_skipping_indices", "metrics",
                   "one", "disks", "storage_policies")
+# the ones that describe the session, not the logs table
+_SESSION_SYSTEM_TABLES = ("query_log", "dropped_tables", "metrics", "one")
 
 
-def _rewrite_system_tables(spark, sql, logs, query_log, tables=None):
-    """CH `system.*` introspection: rewrite `system.parts` etc. to
-    dot-free view names (token-level, so string literals survive) and
-    register ONLY the referenced views — parts reads parquet footers
-    (O(#files) metadata pages, CH's cost class), the rest are tiny
-    local frames. Returns the rewritten SQL text."""
-    tokens = _tokenize(sql)
-    lows = [t.lower() for t in tokens]
-    used, out, i = set(), [], 0
-    while i < len(tokens):
-        if (lows[i] == "system" and not _is_string(tokens[i])
-                and i + 2 < len(tokens) and tokens[i + 1] == "."
-                and lows[i + 2] in _SYSTEM_TABLES):
-            used.add(lows[i + 2])
-            out.append(f"system_{lows[i + 2]}")
-            i += 3
-        else:
-            out.append(tokens[i])
-            i += 1
-    if not used:
-        return sql
+def _system_table(st, name: str) -> DataFrame:
+    """The frame behind CH `system.<name>` introspection. parts reads
+    parquet footers (O(#files) metadata pages, CH's cost class), the
+    rest are tiny local frames."""
     from clickhouse_observability_spark.session import local_df
 
-    if "parts" in used:
-        if logs is None:
-            raise ChDialectError("system.parts needs the logs table")
-        logs.parts_df().createOrReplaceTempView("system_parts")
-    if "disks" in used:
+    spark, logs = st.spark, st.logs
+    if logs is None and name not in _SESSION_SYSTEM_TABLES:
+        raise ChDialectError(f"system.{name} needs the logs table")
+    if name == "parts":
+        return logs.parts_df()
+    if name == "disks":
         # CH system.disks: one row per storage location. Here: the
         # base path + every occupied tier volume (sources/tiering),
         # with live parquet bytes per root (O(#files) stat calls —
         # the same metadata-only cost class as system.parts).
-        if logs is None:
-            raise ChDialectError("system.disks needs the logs table")
         import glob as _glob
-        import os as _os
 
         from clickhouse_observability_spark.schema import (
             PARTITION_COLUMN,
@@ -4868,24 +4859,21 @@ def _rewrite_system_tables(spark, sql, logs, query_log, tables=None):
 
         rows = []
         for vol, root in tier_roots(logs.path):
-            files = _glob.glob(_os.path.join(
+            files = _glob.glob(os.path.join(
                 root, f"{PARTITION_COLUMN}=*", "*.parquet"))
             rows.append((vol, root,
-                         sum(_os.path.getsize(f) for f in files),
+                         sum(os.path.getsize(f) for f in files),
                          len(files)))
-        local_df(
+        return local_df(
             spark, rows,
             "name string, path string, bytes_on_disk bigint, "
             "parts int",
-        ).createOrReplaceTempView("system_disks")
-    if "storage_policies" in used:
+        )
+    if name == "storage_policies":
         # CH system.storage_policies: the armed move rules as the
         # policy's volume list — the default volume first, then the
         # TTL tiers in horizon order (move_factor-style knobs have
         # no analog; the horizon IS the policy here).
-        if logs is None:
-            raise ChDialectError(
-                "system.storage_policies needs the logs table")
         from clickhouse_observability_spark.sources.tiering import (
             DEFAULT_VOLUME,
             read_storage_tiers,
@@ -4896,47 +4884,41 @@ def _rewrite_system_tables(spark, sql, logs, query_log, tables=None):
             ("default", r["volume"], i + 2, int(r["days"]))
             for i, r in enumerate(read_storage_tiers(logs.path))
         ]
-        local_df(
+        return local_df(
             spark, rows,
             "policy_name string, volume_name string, "
             "volume_priority int, move_after_days int",
-        ).createOrReplaceTempView("system_storage_policies")
-    if "columns" in used:
-        if logs is None:
-            raise ChDialectError("system.columns needs the logs table")
+        )
+    if name == "columns":
         from clickhouse_observability_spark.schema import LOGS_SCHEMA
         rows = [("logs", f.name, f.dataType.simpleString(), pos + 1)
                 for pos, f in enumerate(LOGS_SCHEMA.fields)]
         rows += [("logs", c["name"], c["spark_type"],
                   len(rows) + i + 1)
                  for i, c in enumerate(logs.schema_ext.columns)]
-        local_df(
+        return local_df(
             spark, rows,
             "table string, name string, type string, position int",
-        ).createOrReplaceTempView("system_columns")
-    if "tables" in used:
-        if logs is None:
-            raise ChDialectError("system.tables needs the logs table")
+        )
+    if name == "tables":
         rows = [("logs", "MergeTree", "toYYYYMM(ts)", "(service, ts)")]
         # projections are table-internal (CH lists them in
         # system.projections, not system.tables)
         rows += [(mv.name, "MaterializedView", "", "")
                  for mv in logs.materialized_views
                  if not mv.spec.get("projection")]
-        local_df(
+        return local_df(
             spark, rows,
             "name string, engine string, partition_key string, "
             "sorting_key string",
-        ).createOrReplaceTempView("system_tables")
-    if "query_log" in used:
-        if query_log is None:
+        )
+    if name == "query_log":
+        if st.query_log is None:
             raise ChDialectError(
                 "system.query_log needs a QueryLog (the API server "
                 "passes its own; standalone callers pass query_log=)")
-        query_log.to_df(spark).createOrReplaceTempView("system_query_log")
-    if "mutations" in used:
-        if logs is None:
-            raise ChDialectError("system.mutations needs the logs table")
+        return st.query_log.to_df(spark)
+    if name == "mutations":
         from clickhouse_observability_spark.sources.mutations import (
             mutation_history,
         )
@@ -4947,68 +4929,62 @@ def _rewrite_system_tables(spark, sql, logs, query_log, tables=None):
              int(r["is_done"]))
             for r in mutation_history(logs.path)
         ]
-        local_df(
+        return local_df(
             spark, rows,
             "table string, mutation_id string, command string, "
             "create_time string, op string, matched_rows bigint, "
             "affected_months string, is_done int",
-        ).createOrReplaceTempView("system_mutations")
-    if "detached_parts" in used:
+        )
+    if name == "detached_parts":
         # CH system.detached_parts: parts sitting in detached/ —
         # here, months parked by ALTER TABLE ... DETACH PARTITION.
         # Footer-free: one listdir per detached month (name, file
         # count, bytes), the same metadata-only cost class as the
         # operation that created them.
-        if logs is None:
-            raise ChDialectError(
-                "system.detached_parts needs the logs table")
-        import os as _os
-
         from clickhouse_observability_spark.schema import PARTITION_COLUMN
         from clickhouse_observability_spark.sources.mutations import (
             _DETACHED_DIR,
         )
 
         rows = []
-        det = _os.path.join(logs.path, _DETACHED_DIR)
-        if _os.path.isdir(det):
-            for d in sorted(_os.listdir(det)):
+        det = os.path.join(logs.path, _DETACHED_DIR)
+        if os.path.isdir(det):
+            for d in sorted(os.listdir(det)):
                 if not d.startswith(f"{PARTITION_COLUMN}="):
                     continue
-                full = _os.path.join(det, d)
-                files = [f for f in _os.listdir(full)
+                full = os.path.join(det, d)
+                files = [f for f in os.listdir(full)
                          if f.endswith(".parquet")]
                 rows.append((
                     "logs", int(d.split("=", 1)[1]), len(files),
-                    sum(_os.path.getsize(_os.path.join(full, f))
+                    sum(os.path.getsize(os.path.join(full, f))
                         for f in files),
                 ))
-        local_df(
+        return local_df(
             spark, rows,
             "table string, partition int, files int, bytes_on_disk "
             "bigint",
-        ).createOrReplaceTempView("system_detached_parts")
-    if "one" in used:
+        )
+    if name == "one":
         # CH system.one: the one-row dummy table (`SELECT 1 FROM
         # system.one` is CH's `SELECT 1`)
-        local_df(spark, [(0,)], "dummy tinyint") \
-            .createOrReplaceTempView("system_one")
-    if "metrics" in used:
+        return local_df(spark, [(0,)], "dummy tinyint")
+    if name == "metrics":
         # CH system.metrics: current engine state as (metric, value,
         # description) rows. The analog reads the live SparkContext —
         # scheduler and executor state, driver-side, zero jobs.
         import time as _time
 
         sc = spark.sparkContext
-        st = sc.statusTracker()
+        tracker = sc.statusTracker()
         try:
             n_exec = sc._jsc.sc().getExecutorMemoryStatus().size()
         except Exception:  # JVM bridge shape varies across deploys
             n_exec = -1
         rows = [
-            ("ActiveJobs", float(len(st.getActiveJobsIds())),
+            ("ActiveJobs", float(len(tracker.getActiveJobsIds())),
              "jobs currently running in the scheduler"),
-            ("ActiveStages", float(len(st.getActiveStageIds())),
+            ("ActiveStages", float(len(tracker.getActiveStageIds())),
              "stages currently running"),
             ("Executors", float(n_exec),
              "live executor endpoints (incl. driver in local mode)"),
@@ -5018,30 +4994,27 @@ def _rewrite_system_tables(spark, sql, logs, query_log, tables=None):
              round(_time.time() - sc.startTime / 1000.0, 1),
              "seconds since the session's context started"),
         ]
-        local_df(
+        return local_df(
             spark, rows, "metric string, value double, "
             "description string",
-        ).createOrReplaceTempView("system_metrics")
-    if "data_skipping_indices" in used:
+        )
+    if name == "data_skipping_indices":
         # CH system.data_skipping_indices: one row per index with its
         # definition and how many at-rest files its summaries cover.
         from clickhouse_observability_spark.sources.skip_index import (
             SkipIndex,
         )
 
-        if logs is None:
-            raise ChDialectError(
-                "system.data_skipping_indices needs the logs table")
         rows = [("logs", i.meta["name"], i.meta["type"],
                  i.meta["expr"], int(i.meta["granularity"]),
                  int(i.meta.get("n_files", 0)))
                 for i in SkipIndex.load_all(logs.path)]
-        local_df(
+        return local_df(
             spark, rows,
             "table string, name string, type string, expr string, "
             "granularity int, files_indexed int",
-        ).createOrReplaceTempView("system_data_skipping_indices")
-    if "dropped_tables" in used:
+        )
+    if name == "dropped_tables":
         # CH system.dropped_tables: tables inside the Atomic keep
         # window, restorable with UNDROP TABLE. One row per parked
         # directory in the session's name mapping; metadata-only.
@@ -5050,37 +5023,32 @@ def _rewrite_system_tables(spark, sql, logs, query_log, tables=None):
         )
 
         rows = [(nm, parked) for nm, parked in sorted(
-            ((tables or {}).get(_DROPPED_KEY) or {}).items())]
-        local_df(
-            spark, rows, "name string, data_path string",
-        ).createOrReplaceTempView("system_dropped_tables")
-    if "projections" in used:
-        if logs is None:
-            raise ChDialectError("system.projections needs the logs table")
-        rows = []
-        for mv in logs.materialized_views:
-            if not mv.spec.get("projection"):
-                continue
-            dims = ", ".join(d["alias"] for d in mv.spec["dims"])
-            aggs = ", ".join(
-                f"{a['kind']}({a['arg_sql'] or ''})"
-                for a in mv.spec["aggs"])
-            rows.append(("logs", mv.name, "aggregate", dims, aggs))
-        local_df(
-            spark, rows,
-            "table string, name string, type string, "
-            "dimensions string, aggregates string",
-        ).createOrReplaceTempView("system_projections")
-    return " ".join(out)
+            ((st.tables or {}).get(_DROPPED_KEY) or {}).items())]
+        return local_df(spark, rows, "name string, data_path string")
+    # projections
+    rows = []
+    for mv in logs.materialized_views:
+        if not mv.spec.get("projection"):
+            continue
+        dims = ", ".join(d["alias"] for d in mv.spec["dims"])
+        aggs = ", ".join(
+            f"{a['kind']}({a['arg_sql'] or ''})"
+            for a in mv.spec["aggs"])
+        rows.append(("logs", mv.name, "aggregate", dims, aggs))
+    return local_df(
+        spark, rows,
+        "table string, name string, type string, "
+        "dimensions string, aggregates string",
+    )
 
 
 def _tokenbf_prune_logs(spark, sql, logs, other_names=()):
     """CH consults data-skipping indexes automatically inside its
     scan; the SQL-path analog: when a statement's WHERE carries a
     top-level `hasToken(msg, '<literal>')` conjunct and the logs
-    table has a MATERIALIZED tokenbf_v1 index on msg, the `logs`
-    view registers over the index-pruned file set instead of the
-    full scan. Returns the pruned frame or None (= full scan).
+    table has a MATERIALIZED tokenbf_v1 index on msg, the statement's
+    `logs` binds to the index-pruned file set instead of the full
+    scan. Returns the pruned frame or None (= full scan).
 
     Soundness guards — each bails to the full scan:
     - the statement is a plain read (SELECT/WITH — ALTER/INSERT
@@ -5251,987 +5219,878 @@ def _named_table(name: str, logs, tables):
         "ch_sql(tables={name: table})")
 
 
-import threading as _threading
-
-# statement-scoped marker: a LogsTable whose `logs` temp view was
-# narrowed to an index-pruned file set for the CURRENT statement.
-# ch_sql's finally-block restores the full read so the narrowed view
-# can never leak to out-of-band spark.sql(...) callers (r8 hole).
-_PRUNED_LOGS_VIEW = _threading.local()
+# keywords a relation name follows
+_RELATION_HEADS = ("from", "join", "table", "describe", "desc")
 
 
-def ch_sql(
-    spark: SparkSession,
-    sql: str,
-    logs=None,
-    views: dict[str, DataFrame] | None = None,
-    query_log=None,
-    tables: dict | None = None,
-):
-    """Execute one ClickHouse SQL statement.
+@dataclass
+class _Stmt:
+    """One ch_sql call: the statement and the tables it may use."""
 
-    `logs`: a LogsTable — registered as view `logs` for SELECT /
-    DESCRIBE and used as the write path for INSERT (returns the
-    inserted-row count). `views`: extra name -> DataFrame mappings.
-    `query_log`: a QueryLog whose ring backs `system.query_log`.
-    `tables`: extra name -> LogsTable mappings for the multi-table
-    statements (MOVE/REPLACE/ATTACH PARTITION across tables, RENAME
-    TABLE, EXCHANGE TABLES) — RENAME/EXCHANGE edit this dict IN
-    PLACE, the analog of CH Atomic's metadata-only name mapping.
-    Mentioned entries are also registered as readable views.
-    """
-    prev = getattr(_PRUNED_LOGS_VIEW, "table", None)
-    _PRUNED_LOGS_VIEW.table = None
-    try:
-        return _ch_sql_stmt(spark, sql, logs, views, query_log, tables)
-    finally:
-        t = getattr(_PRUNED_LOGS_VIEW, "table", None)
-        if t is not None:
-            # the statement's result plan is already resolved against
-            # the pruned view (Spark binds temp views at analysis
-            # time); restoring here only protects LATER readers
-            t.read().createOrReplaceTempView("logs")
-        _PRUNED_LOGS_VIEW.table = prev
+    spark: SparkSession
+    sql: str
+    logs: object = None
+    views: dict | None = None
+    query_log: object = None
+    tables: dict | None = None
 
 
-def _ch_sql_stmt(
-    spark: SparkSession,
-    sql: str,
-    logs=None,
-    views: dict[str, DataFrame] | None = None,
-    query_log=None,
-    tables: dict | None = None,
-):
-    for name, df in (views or {}).items():
-        df.createOrReplaceTempView(name)
-    if tables:
-        mentioned = {w.lower() for w in re.findall(r"[A-Za-z_]\w*", sql)}
-        for nm, t in tables.items():
-            if (nm.lower() != "logs" and not nm.startswith("__")
-                    and nm.lower() in mentioned):
-                t.read().createOrReplaceTempView(nm)
+def _spark_sql(st: _Stmt, text: str, prefix: str = "",
+               extra: dict | None = None) -> DataFrame:
+    """Translate CH `text` and run it through `spark.sql` with every
+    name it reads bound for this call only — the one place this
+    module creates and drops temp views.
+
+    A name resolves, last match winning: `views=` entries, then
+    `tables=` entries, then `logs` (narrowed to the index-pruned file
+    set when _tokenbf_prune_logs admits the whole statement), then
+    attached materialized views, then `extra` (frames a statement
+    builds mid-flight: the ASOF-joined and projection-served frames);
+    `system.<name>` resolves to _system_table. Each name the text
+    mentions is registered under a view name unique to this call, and
+    its identifier tokens and dictGet* dictionary literals are
+    rewritten to it (not `x.name` fields, nor a name the text also
+    aliases outside a relation position), so concurrent statements on
+    one session never see each other's bindings. Spark resolves temp
+    views when it analyzes the statement, which `spark.sql` does
+    before returning; the views are then dropped, whether it returned
+    or raised."""
+    logs = st.logs
+    frames = {n.lower(): (lambda df=df: df)
+              for n, df in (st.views or {}).items()}
+    frames.update((n.lower(), t.read) for n, t in (st.tables or {}).items()
+                  if n.lower() != "logs" and not n.startswith("__"))
     if logs is not None:
-        other = set(views or ()) | {
-            nm for nm in (tables or ()) if not nm.startswith("__")
-        } | {mv.name for mv in logs.materialized_views
-             if not mv.spec.get("projection")}
-        pruned = _tokenbf_prune_logs(spark, sql, logs,
-                                     other_names=other)
-        if pruned is not None:
-            _PRUNED_LOGS_VIEW.table = logs
-        (logs.read() if pruned is None
-         else pruned).createOrReplaceTempView("logs")
+        def logs_frame():
+            other = set(st.views or ()) | {
+                n for n in (st.tables or ()) if not n.startswith("__")
+            } | {mv.name for mv in logs.materialized_views
+                 if not mv.spec.get("projection")}
+            pruned = _tokenbf_prune_logs(st.spark, st.sql, logs,
+                                         other_names=other)
+            return logs.read() if pruned is None else pruned
+
+        frames["logs"] = logs_frame
         # attached materialized views are queryable by name — reads
         # see the FINALIZED merge-on-read frame (documented
-        # divergence from CH's raw-state reads). Registered lazily:
-        # only views the statement actually mentions pay the
-        # plan-construction cost (same policy as system.* below).
-        if logs.materialized_views:
-            mentioned = {w.lower()
-                         for w in re.findall(r"[A-Za-z_]\w*", sql)}
-            for mv in logs.materialized_views:
-                # projections are not name-addressable (CH hides them;
-                # they serve queries via _route_projection instead)
-                if mv.spec.get("projection"):
-                    continue
-                if mv.name.lower() in mentioned:
-                    mv.read().createOrReplaceTempView(mv.name)
+        # divergence from CH's raw-state reads); projections are not
+        # name-addressable (CH hides them; _route_projection serves
+        # queries from them instead)
+        frames.update((mv.name.lower(), mv.read)
+                      for mv in logs.materialized_views
+                      if not mv.spec.get("projection"))
+    frames.update(extra or {})
+    tokens = _tokenize(text)
+    lows = [t.lower() for t in tokens]
+    # a name the text also introduces as an alias (`... AS name`)
+    # keeps that meaning: it is rebound only where a relation stands
+    aliases = {lows[j + 1] for j in range(len(lows) - 1)
+               if lows[j] == "as" and tokens[j + 2:j + 3] != ["("]}
+    call = uuid.uuid4().hex[:12]
+    bound: dict[str, str] = {}
+    out, i = [], 0
+    try:
+        while i < len(tokens):
+            key, width, quote = lows[i], 1, ""
+            if (key == "system" and i + 2 < len(tokens)
+                    and tokens[i + 1] == "."
+                    and lows[i + 2] in _SYSTEM_TABLES):
+                key, width = f"system.{lows[i + 2]}", 3
+            elif _is_string(tokens[i]):
+                # dictGet* / dictHas name their view by a string literal
+                key = None
+                if (i > 1 and tokens[i - 1] == "("
+                        and lows[i - 2].startswith("dict")):
+                    key, quote = _string_value(tokens[i]).lower(), "'"
+            elif (i and tokens[i - 1] == ".") or (
+                    key in aliases and tokens[i + 1:i + 2] != ["."]
+                    and (lows[i - 1] if i else "") not in _RELATION_HEADS):
+                key = None
+            if width == 1 and key not in frames:
+                out.append(tokens[i])
+                i += 1
+                continue
+            if key not in bound:
+                frame = (_system_table(st, key[len("system."):])
+                         if width == 3 else frames[key]())
+                view = f"__ch{call}_{key.replace('.', '_')}"
+                frame.createOrReplaceTempView(view)
+                bound[key] = view
+            out.append(quote + bound[key] + quote)
+            i += width
+        return st.spark.sql(prefix + translate(" ".join(out)))
+    finally:
+        for view in bound.values():
+            st.spark.catalog.dropTempView(view)
 
-    me = _ENGINE_DDL_RE.match(sql)
-    if me is not None:
-        name, eng = me.groups()
-        if name.lower() == "logs" and eng.lower() == "mergetree":
-            # the reference's own bootstrap DDL (db.go:41-49) — and
-            # the statement SHOW CREATE TABLE logs reconstructs, so
-            # the round-trip is executable. Idempotent like
-            # IF NOT EXISTS (the reference always passes it).
-            if logs is None:
-                raise ChDialectError("CREATE TABLE logs needs the "
-                                     "logs table binding")
-            logs.init_schema()
-            return 0
-        # honest refusal with the sanctioned route (r10): a generic
-        # CREATE TABLE ... ENGINE = <X> would need a table catalog
-        # this shim deliberately doesn't grow (the reference has ONE
-        # table); the engine SEMANTICS are first-class operators.
+
+# A handler returning _DECLINE passes the statement on down the
+# dispatch table (and finally to Spark).
+_DECLINE = object()
+
+
+def _create_table(st, m):
+    name, eng = m.groups()
+    if name.lower() == "logs" and eng.lower() == "mergetree":
+        # the reference's own bootstrap DDL (db.go:41-49) — and
+        # the statement SHOW CREATE TABLE logs reconstructs, so
+        # the round-trip is executable. Idempotent like
+        # IF NOT EXISTS (the reference always passes it).
+        if st.logs is None:
+            raise ChDialectError("CREATE TABLE logs needs the "
+                                 "logs table binding")
+        st.logs.init_schema()
+        return 0
+    # honest refusal with the sanctioned route (r10): a generic
+    # CREATE TABLE ... ENGINE = <X> would need a table catalog
+    # this shim deliberately doesn't grow (the reference has ONE
+    # table); the engine SEMANTICS are first-class operators.
+    raise ChDialectError(
+        f"CREATE TABLE {name} with ENGINE = {eng} is not "
+        f"supported by this shim (its catalog is the single logs "
+        f"table + views). The MergeTree engine-family SEMANTICS "
+        f"are available as merge-on-read operators: "
+        f"operators/merge_engines.py (Replacing / Collapsing / "
+        f"VersionedCollapsing / Summing) and operators/rollup.py "
+        f"(AggregatingMergeTree -State/-Merge); the logs table "
+        f"itself is the MergeTree analog (sources/writer.py).")
+
+
+def _into_outfile(st, m):
+    inner, out_path, fmt = m.groups()
+    df = ch_sql(st.spark, inner, logs=st.logs, views=st.views,
+                query_log=st.query_log, tables=st.tables)
+    return _write_outfile(df, out_path, fmt or "TabSeparated")
+
+
+def _create_matview(st, m):
+    if_not_exists, name, middle, select_sql = m.groups()
+    populate = _check_mv_middle(middle)
+    logs = st.logs
+    if logs is None:
         raise ChDialectError(
-            f"CREATE TABLE {name} with ENGINE = {eng} is not "
-            f"supported by this shim (its catalog is the single logs "
-            f"table + views). The MergeTree engine-family SEMANTICS "
-            f"are available as merge-on-read operators: "
-            f"operators/merge_engines.py (Replacing / Collapsing / "
-            f"VersionedCollapsing / Summing) and operators/rollup.py "
-            f"(AggregatingMergeTree -State/-Merge); the logs table "
-            f"itself is the MergeTree analog (sources/writer.py).")
+            "CREATE MATERIALIZED VIEW needs the logs table")
+    if (name.lower() in ("logs", "system")
+            or name.lower().startswith("system_")):
+        raise ChDialectError(
+            f"materialized view name {name!r} would shadow the "
+            f"base table / system views; pick another name")
+    if any(v.name == name for v in logs.materialized_views):
+        if if_not_exists:
+            return 0
+        raise ChDialectError(f"materialized view {name!r} already "
+                             f"exists")
+    spec = _parse_mv_select(select_sql)
+    spec["name"] = name
+    mv = logs.create_materialized_view(spec)
+    if populate:
+        # CH POPULATE: backfill from the rows already at rest
+        mv.refresh(logs.read())
+    return 0
 
-    mo = _OUTFILE_RE.match(sql)
-    if mo is not None:
-        inner, out_path, fmt = mo.groups()
-        df = ch_sql(spark, inner, logs=logs, views=views,
-                    query_log=query_log, tables=tables)
-        return _write_outfile(df, out_path, fmt or "TabSeparated")
 
-    mc = _MV_CREATE_RE.match(sql)
-    if mc is not None:
-        if_not_exists, name, middle, select_sql = mc.groups()
-        populate = _check_mv_middle(middle)
-        if logs is None:
-            raise ChDialectError(
-                "CREATE MATERIALIZED VIEW needs the logs table")
-        if (name.lower() in ("logs", "system")
-                or name.lower().startswith("system_")):
-            raise ChDialectError(
-                f"materialized view name {name!r} would shadow the "
-                f"base table / system views; pick another name")
-        if any(v.name == name for v in logs.materialized_views):
-            if if_not_exists:
-                return 0
-            raise ChDialectError(f"materialized view {name!r} already "
-                                 f"exists")
-        spec = _parse_mv_select(select_sql)
-        spec["name"] = name
-        mv = logs.create_materialized_view(spec)
-        if populate:
-            # CH POPULATE: backfill from the rows already at rest
-            mv.refresh(logs.read())
+def _drop_view(st, m):
+    name = m.group(2)
+    if st.logs is not None and any(
+            v.name == name for v in st.logs.materialized_views):
+        st.logs.drop_materialized_view(name)
         return 0
-
-    md = _DROP_VIEW_RE.match(sql)
-    if md is not None and logs is not None and any(
-            v.name == md.group(2) for v in logs.materialized_views):
-        logs.drop_materialized_view(md.group(2))
-        # an earlier SELECT may have registered the view's frame as a
-        # temp view — drop that too or later reads would hit it stale
-        spark.catalog.dropTempView(md.group(2))
-        return 0
-    if md is not None and tables and md.group(2) in tables \
-            and not md.group(2).startswith("__"):
+    if st.tables and name in st.tables and not name.startswith("__"):
         # DROP TABLE on a mapped table: CH Atomic keeps the data for
         # the undrop window — park the directory, detach the name
         from clickhouse_observability_spark.sources import mutations as MU
 
-        try:
-            MU.drop_table(tables, md.group(2))
-        except ValueError as e:
-            raise ChDialectError(str(e)) from e
-        spark.catalog.dropTempView(md.group(2))
+        MU.drop_table(st.tables, name)
         return 0
     # a non-MV, non-mapped DROP falls through to Spark, whose own
     # IF EXISTS semantics handle temp views correctly
+    return _DECLINE
 
-    mud = _UNDROP_TABLE_RE.match(sql)
-    if mud is not None:
-        from clickhouse_observability_spark.sources import mutations as MU
 
-        if tables is None:
-            raise ChDialectError(
-                "UNDROP TABLE needs ch_sql(tables={...}) — the name "
-                "mapping records the parked directory")
-        try:
-            MU.undrop_table(spark, tables, mud.group(1))
-        except ValueError as e:
-            raise ChDialectError(str(e)) from e
-        return 0
+def _undrop_table(st, m):
+    from clickhouse_observability_spark.sources import mutations as MU
 
-    mp = _PROJ_ADD_RE.match(sql)
-    if mp is not None:
-        tname, if_not_exists, pname, body = mp.groups()
-        if tname.lower() != "logs" or logs is None:
-            raise ChDialectError("projections supported for `logs` only")
-        if not body.strip().lower().startswith("select"):
-            raise ChDialectError(
-                "only AGGREGATE projections (SELECT ... GROUP BY ...) "
-                "are supported; for a sort-order projection use the "
-                "Z-order/bucketing layout tools (sources/zorder.py)")
-        if any(v.name == pname for v in logs.materialized_views):
-            if if_not_exists:
-                return 0
-            raise ChDialectError(f"projection {pname!r} already exists")
-        spec = _parse_mv_select(body)
-        spec["name"] = pname
-        spec["projection"] = True
-        # Coverage contract (review r6): CH's projections lag only in
-        # DATA — its optimizer answers old parts from raw data, so
-        # queries stay CORRECT before MATERIALIZE. A state-serving
-        # router can't mix sources per part, so the flag below gates
-        # routing entirely: a projection added to a NON-empty table
-        # is not servable until MATERIALIZE PROJECTION backfills
-        # (queries fall back to the base scan — correct, just not
-        # accelerated). Added to an empty table it covers everything
-        # from the first insert.
-        spec["covers_table"] = bool(logs.read().isEmpty())
-        logs.create_materialized_view(spec)
-        return 0
+    if st.tables is None:
+        raise ChDialectError(
+            "UNDROP TABLE needs ch_sql(tables={...}) — the name "
+            "mapping records the parked directory")
+    MU.undrop_table(st.spark, st.tables, m.group(1))
+    return 0
 
-    mp = _PROJ_DROP_RE.match(sql)
-    if mp is not None and logs is not None:
-        tname, if_exists, pname = mp.groups()
-        if any(v.name == pname and v.spec.get("projection")
-               for v in logs.materialized_views):
-            logs.drop_materialized_view(pname)
+
+def _add_projection(st, m, logs):
+    _, if_not_exists, pname, body = m.groups()
+    if not body.strip().lower().startswith("select"):
+        raise ChDialectError(
+            "only AGGREGATE projections (SELECT ... GROUP BY ...) "
+            "are supported; for a sort-order projection use the "
+            "Z-order/bucketing layout tools (sources/zorder.py)")
+    if any(v.name == pname for v in logs.materialized_views):
+        if if_not_exists:
             return 0
-        if if_exists:
+        raise ChDialectError(f"projection {pname!r} already exists")
+    spec = _parse_mv_select(body)
+    spec["name"] = pname
+    spec["projection"] = True
+    # Coverage contract (review r6): CH's projections lag only in
+    # DATA — its optimizer answers old parts from raw data, so
+    # queries stay CORRECT before MATERIALIZE. A state-serving
+    # router can't mix sources per part, so the flag below gates
+    # routing entirely: a projection added to a NON-empty table
+    # is not servable until MATERIALIZE PROJECTION backfills
+    # (queries fall back to the base scan — correct, just not
+    # accelerated). Added to an empty table it covers everything
+    # from the first insert.
+    spec["covers_table"] = bool(logs.read().isEmpty())
+    logs.create_materialized_view(spec)
+    return 0
+
+
+def _drop_projection(st, m):
+    if st.logs is None:
+        return _DECLINE
+    _, if_exists, pname = m.groups()
+    if any(v.name == pname and v.spec.get("projection")
+           for v in st.logs.materialized_views):
+        st.logs.drop_materialized_view(pname)
+        return 0
+    if if_exists:
+        return 0
+    raise ChDialectError(f"no projection {pname!r}")
+
+
+def _materialize_projection(st, m):
+    if st.logs is None:
+        return _DECLINE
+    pname = m.group(2)
+    for v in st.logs.materialized_views:
+        if v.name == pname and v.spec.get("projection"):
+            v.refresh(st.logs.read())
+            # backfilled -> now answerable for the whole table
+            v.spec["covers_table"] = True
+            v.save()
             return 0
-        raise ChDialectError(f"no projection {pname!r}")
+    raise ChDialectError(f"no projection {pname!r}")
 
-    mp = _PROJ_MAT_RE.match(sql)
-    if mp is not None and logs is not None:
-        pname = mp.group(2)
-        for v in logs.materialized_views:
-            if v.name == pname and v.spec.get("projection"):
-                v.refresh(logs.read())
-                # backfilled -> now answerable for the whole table
-                v.spec["covers_table"] = True
-                v.save()
-                return 0
-        raise ChDialectError(f"no projection {pname!r}")
 
-    mo = _OPTIMIZE_RE.match(sql)
-    if mo is not None:
-        # CH `OPTIMIZE TABLE t [PARTITION p] [FINAL]` forces the
-        # background MergeTree merge; the engine's counterpart is the
-        # explicit partition compaction (sources/retention.py).
-        # Returns the number of input files merged, like INSERT
-        # returns its row count.
-        import os as _os
+def _optimize(st, m, logs):
+    # CH `OPTIMIZE TABLE t [PARTITION p] [FINAL]` forces the
+    # background MergeTree merge; the engine's counterpart is the
+    # explicit partition compaction (sources/retention.py).
+    # Returns the number of input files merged, like INSERT
+    # returns its row count.
+    from clickhouse_observability_spark.sources.retention import (
+        compact_partition,
+    )
+    from clickhouse_observability_spark.sources.tiering import (
+        partition_months,
+    )
 
-        from clickhouse_observability_spark.schema import PARTITION_COLUMN
-        from clickhouse_observability_spark.sources.retention import (
-            compact_partition,
-        )
+    _, part, dedup = m.groups()
+    months = ([int(part)] if part is not None
+              else partition_months(logs.path))  # every volume
+    return sum(
+        compact_partition(st.spark, logs.path, month,
+                          deduplicate=dedup is not None)
+        for month in months
+    )
 
-        tname, part, dedup = mo.groups()
-        if tname.lower() != "logs" or logs is None:
-            raise ChDialectError("OPTIMIZE supported for `logs` only")
-        if part is not None:
-            months = [int(part)]
-        else:
-            from clickhouse_observability_spark.sources.tiering import (
-                partition_months,
-            )
 
-            months = partition_months(logs.path)  # every volume
-        return sum(
-            compact_partition(spark, logs.path, month,
-                              deduplicate=dedup is not None)
-            for month in months
-        )
+def _show_tables(st, m):
+    # name-addressable tables only, like system.tables: the base
+    # table + attached matviews; projections stay hidden (CH
+    # lists them in system.projections)
+    from clickhouse_observability_spark.session import local_df
 
-    if _SHOW_TABLES_RE.match(sql):
-        # name-addressable tables only, like system.tables: the base
-        # table + attached matviews; projections stay hidden (CH
-        # lists them in system.projections)
-        from clickhouse_observability_spark.session import local_df
+    if st.logs is None and not st.tables:
+        raise ChDialectError("SHOW TABLES needs the logs table "
+                             "or a tables= mapping")
+    names = []
+    if st.logs is not None:
+        names.append("logs")
+        names += sorted(
+            mv.name for mv in st.logs.materialized_views
+            if not mv.spec.get("projection"))
+    # the multi-table mapping's live names (dropped tables are
+    # parked under __dropped__ and stay hidden, as in CH)
+    names += sorted(n for n in (st.tables or {})
+                    if not n.startswith("__") and n not in names)
+    return local_df(st.spark, [(n,) for n in names], "name string")
 
-        if logs is None and not tables:
-            raise ChDialectError("SHOW TABLES needs the logs table "
-                                 "or a tables= mapping")
-        names = []
-        if logs is not None:
-            names.append("logs")
-            names += sorted(
-                mv.name for mv in logs.materialized_views
-                if not mv.spec.get("projection"))
-        # the multi-table mapping's live names (dropped tables are
-        # parked under __dropped__ and stay hidden, as in CH)
-        names += sorted(n for n in (tables or {})
-                        if not n.startswith("__") and n not in names)
-        return local_df(spark, [(n,) for n in names], "name string")
 
-    mck = _CHECK_TABLE_RE.match(sql)
-    if mck is not None:
-        # CH CHECK TABLE: per-part integrity rows (part_path,
-        # is_passed, message) + a summary row. Footer-only metadata
-        # pass — the manifest-verification cost class, never a data
-        # rescan (sources/mutations.check_table).
-        from clickhouse_observability_spark.session import local_df
-        from clickhouse_observability_spark.sources.mutations import (
-            check_table,
-        )
+def _check_table(st, m, logs):
+    # CH CHECK TABLE: per-part integrity rows (part_path,
+    # is_passed, message) + a summary row. Footer-only metadata
+    # pass — the manifest-verification cost class, never a data
+    # rescan (sources/mutations.check_table).
+    from clickhouse_observability_spark.session import local_df
+    from clickhouse_observability_spark.sources.mutations import (
+        check_table,
+    )
 
-        if mck.group(1).lower() != "logs" or logs is None:
-            raise ChDialectError("CHECK TABLE supported for `logs` only")
-        rows = [(r["part_path"], int(r["is_passed"]), r["message"])
-                for r in check_table(spark, logs.path)]
-        return local_df(
-            spark, rows,
-            "part_path string, is_passed int, message string")
+    rows = [(r["part_path"], int(r["is_passed"]), r["message"])
+            for r in check_table(st.spark, logs.path)]
+    return local_df(
+        st.spark, rows,
+        "part_path string, is_passed int, message string")
 
-    msc = _SHOW_CREATE_RE.match(sql)
-    if msc is not None:
-        # reconstruct the CH DDL the reference bootstraps
-        # (db.go:41-49) plus this table's OWN armed state: TTL and
-        # attached projections — the statement a CH operator would
-        # need to recreate the table elsewhere.
-        from clickhouse_observability_spark.session import local_df
 
-        if msc.group(1).lower() != "logs" or logs is None:
-            raise ChDialectError("SHOW CREATE supported for `logs` only")
-        from clickhouse_observability_spark.sources.retention import (
-            read_column_ttls,
-        )
+def _show_create(st, m, logs):
+    # reconstruct the CH DDL the reference bootstraps
+    # (db.go:41-49) plus this table's OWN armed state: TTL and
+    # attached projections — the statement a CH operator would
+    # need to recreate the table elsewhere.
+    from clickhouse_observability_spark.session import local_df
+    from clickhouse_observability_spark.sources.retention import (
+        read_column_ttls,
+        read_table_ttl_spec,
+    )
 
-        col_ttls = read_column_ttls(logs.path)
+    col_ttls = read_column_ttls(logs.path)
 
-        def _ct(col: str) -> str:  # armed COLUMN TTL, rendered CH-style
-            d = col_ttls.get(col)
-            return f" TTL ts + INTERVAL {d} DAY" if d else ""
+    def _ct(col: str) -> str:  # armed COLUMN TTL, rendered CH-style
+        d = col_ttls.get(col)
+        return f" TTL ts + INTERVAL {d} DAY" if d else ""
 
-        parts = [
-            "CREATE TABLE logs (",
-            "  ts DateTime64(3, 'UTC'), service LowCardinality(String),",
-            f"  level LowCardinality(String){_ct('level')}, "
-            f"msg String{_ct('msg')}, attrs String{_ct('attrs')},",
-            f"  trace_id String{_ct('trace_id')}, "
-            f"span_id String{_ct('span_id')}",
-        ]
-        for line in logs.schema_ext.ddl_clauses():
-            parts[-1] += ","
-            parts.append(line)
-        for mv in logs.materialized_views:
-            if not mv.spec.get("projection"):
-                continue
-            sel = ", ".join(
-                [f"{d['sql']} AS {d['alias']}" for d in mv.spec["dims"]]
-                + [
-                    f"{a['kind']}({a['arg_sql'] or ''}) AS {a['alias']}"
-                    for a in mv.spec["aggs"]
-                ])
-            grp = ", ".join(d["alias"] for d in mv.spec["dims"])
-            parts[-1] += ","
-            parts.append(
-                f"  PROJECTION {mv.name} (SELECT {sel}"
-                + (f" GROUP BY {grp}" if grp else "") + ")")
-        parts += [
-            ") ENGINE = MergeTree",
-            "PARTITION BY toYYYYMM(ts)",
-            "ORDER BY (service, ts)",
-        ]
-        from clickhouse_observability_spark.sources.retention import (
-            read_table_ttl_spec,
-        )
-
-        ttl_spec = read_table_ttl_spec(logs.path)
-        clauses = []
-        for r in sorted((ttl_spec or {}).get("to_volume") or [],
-                        key=lambda r: int(r["days"])):
-            clauses.append(
-                f"ts + INTERVAL {int(r['days'])} DAY "
-                f"TO {r.get('kind', 'VOLUME')} '{r['volume']}'")
-        for r in (ttl_spec or {}).get("delete_where") or []:
-            clauses.append(
-                f"ts + INTERVAL {int(r['days'])} DAY "
-                f"DELETE WHERE {r['where']}")
-        for r in (ttl_spec or {}).get("recompress") or []:
-            lvl = r.get("level")
-            codec = r["codec"] + ("" if lvl is None else f"({int(lvl)})")
-            clauses.append(
-                f"ts + INTERVAL {int(r['days'])} DAY "
-                f"RECOMPRESS CODEC({codec})")
-        if ttl_spec is not None and ttl_spec.get("retention_days") is not None:
-            days = ttl_spec["retention_days"]
-            gb = ttl_spec.get("group_by")
-            if gb:
-                clause = (f"ts + INTERVAL {days} DAY "
-                          f"GROUP BY {', '.join(gb)}")
-                sets = ttl_spec.get("set") or {}
-                if sets:
-                    clause += " SET " + ", ".join(
-                        f"{c} = {e}" for c, e in sets.items())
-                clauses.append(clause)
-            else:
-                clauses.append(f"ts + INTERVAL {days} DAY DELETE")
-        if clauses:
-            # renders exactly what MODIFY TTL re-parses (round-trip)
-            parts.append("TTL " + ", ".join(clauses))
-        return local_df(spark, [("\n".join(parts),)], "statement string")
-
-    mf = _FREEZE_RE.match(sql)
-    if mf is not None:
-        # CH FREEZE: hardlink snapshot into _shadow/<name> — zero
-        # bytes copied; mutations/merges replace files, never modify
-        # them, so the frozen view stays consistent.
-        from clickhouse_observability_spark.sources import mutations as MU
-
-        tname, part, name = mf.groups()
-        if tname.lower() != "logs" or logs is None:
-            raise ChDialectError("FREEZE supported for `logs` only")
-        try:
-            return MU.freeze_table(
-                spark, logs.path,
-                month=int(part) if part else None, name=name)["files"]
-        except ValueError as e:
-            raise ChDialectError(str(e)) from e
-
-    mu = _UNFREEZE_RE.match(sql)
-    if mu is not None:
-        from clickhouse_observability_spark.sources import mutations as MU
-
-        if logs is None:
-            raise ChDialectError("SYSTEM UNFREEZE needs the logs table")
-        try:
-            MU.unfreeze_table(spark, logs.path, mu.group(1))
-        except ValueError as e:
-            raise ChDialectError(str(e)) from e
-        return 0
-
-    mp = _PART_OP_RE.match(sql)
-    if mp is not None:
-        # CH partition lifecycle -> metadata-only directory moves
-        # (sources/mutations.py): DROP unlinks the month, DETACH
-        # parks it under `_detached/` (underscore dirs are invisible
-        # to Spark's listing — CH's detached/ semantics), ATTACH
-        # returns it. Returns the file count touched, the analog of
-        # OPTIMIZE's merged-file count.
-        from clickhouse_observability_spark.sources import mutations as MU
-
-        tname, op, part = mp.groups()
-        t = _named_table(tname, logs, tables)
-        fn = {"drop": MU.drop_partition, "detach": MU.detach_partition,
-              "attach": MU.attach_partition}[op.lower()]
-        try:
-            return fn(spark, t.path, int(part))["files"]
-        except ValueError as e:
-            raise ChDialectError(str(e)) from e
-
-    mvv = _MOVE_PART_VOL_RE.match(sql)
-    if mvv is not None:
-        from clickhouse_observability_spark.sources.tiering import (
-            move_partition_to_volume,
-        )
-
-        tname, part, vol = mvv.groups()
-        t = _named_table(tname, logs, tables)
-        try:
-            return int(
-                move_partition_to_volume(t.path, int(part), vol)["moved"]
-            )
-        except ValueError as e:
-            raise ChDialectError(str(e)) from e
-
-    mmv = _MOVE_PART_RE.match(sql)
-    if mmv is not None:
-        from clickhouse_observability_spark.sources import mutations as MU
-
-        src_name, part, dst_name = mmv.groups()
-        src = _named_table(src_name, logs, tables)
-        dst = _named_table(dst_name, logs, tables)
-        try:
-            return MU.move_partition_to_table(
-                spark, src.path, dst.path, int(part))["files"]
-        except ValueError as e:
-            raise ChDialectError(str(e)) from e
-
-    mcp = _COPY_PART_RE.match(sql)
-    if mcp is not None:
-        from clickhouse_observability_spark.sources import mutations as MU
-
-        dst_name, op, part, src_name = mcp.groups()
-        dst = _named_table(dst_name, logs, tables)
-        src = _named_table(src_name, logs, tables)
-        try:
-            return MU.copy_partition_from(
-                spark, dst.path, src.path, int(part),
-                replace=op.lower() == "replace")["files"]
-        except ValueError as e:
-            raise ChDialectError(str(e)) from e
-
-    mrt = _RENAME_TABLE_RE.match(sql)
-    if mrt is not None:
-        from clickhouse_observability_spark.sources import mutations as MU
-
-        if tables is None:
-            raise ChDialectError(
-                "RENAME TABLE needs ch_sql(tables={...}) — the name "
-                "mapping is what the statement edits")
-        try:
-            MU.rename_table(tables, *mrt.groups())
-        except ValueError as e:
-            raise ChDialectError(str(e)) from e
-        return 0
-
-    mex = _EXCHANGE_RE.match(sql)
-    if mex is not None:
-        from clickhouse_observability_spark.sources import mutations as MU
-
-        if tables is None:
-            raise ChDialectError(
-                "EXCHANGE TABLES needs ch_sql(tables={...}) — the "
-                "name mapping is what the statement edits")
-        try:
-            MU.exchange_tables(tables, *mex.groups())
-        except ValueError as e:
-            raise ChDialectError(str(e)) from e
-        return 0
-
-    mmc = _MAT_COL_RE.match(sql)
-    if mmc is not None:
-        from clickhouse_observability_spark.sources import mutations as MU
-
-        tname, col, part = mmc.groups()
-        t = _named_table(tname, logs, tables)
-        try:
-            return MU.materialize_column(
-                spark, t.path, col,
-                month=None if part is None else int(part),
-            )["matched_rows"]
-        except ValueError as e:
-            raise ChDialectError(str(e)) from e
-
-    mai = _ADD_INDEX_RE.match(sql)
-    if mai is not None:
-        from clickhouse_observability_spark.sources.skip_index import (
-            SkipIndex,
-        )
-
-        tname, iname, expr_ch, type_full, set_n, tok_params, gran = \
-            mai.groups()
-        t = _named_table(tname, logs, tables)
-        tf = type_full.lower()
-        if tf.startswith("set"):
-            type_, param = "set", int(set_n)
-        elif tf.startswith("tokenbf_v1"):
-            type_ = "tokenbf_v1"
-            param = [int(x.strip()) for x in tok_params.split(",")
-                     if x.strip()] or None
-        elif tf.startswith("bloom_filter"):
-            type_, param = "bloom_filter", None
-        else:
-            type_, param = "minmax", None
-        spark_expr = _mutation_expr(_tokenize(expr_ch))
-        if_not_exists = re.search(r"IF\s+NOT\s+EXISTS", sql,
-                                  re.IGNORECASE) is not None
-        try:
-            SkipIndex.create(t.path, iname, spark_expr, type_,
-                             param=param, granularity=int(gran or 1))
-        except ValueError as e:
-            if if_not_exists and "already exists" in str(e):
-                return 0
-            raise ChDialectError(str(e)) from e
-        return 0
-
-    mdi = _DROP_INDEX_RE.match(sql)
-    if mdi is not None:
-        from clickhouse_observability_spark.sources.skip_index import (
-            SkipIndex,
-        )
-
-        tname, if_exists, iname = mdi.groups()
-        t = _named_table(tname, logs, tables)
-        idx = SkipIndex.load(t.path, iname)
-        if idx is None:
-            if if_exists:
-                return 0
-            raise ChDialectError(f"no skip index {iname!r}")
-        idx.drop()
-        return 0
-
-    mmi = _MAT_INDEX_RE.match(sql)
-    if mmi is not None:
-        from clickhouse_observability_spark.sources.skip_index import (
-            SkipIndex,
-        )
-
-        tname, iname = mmi.groups()
-        t = _named_table(tname, logs, tables)
-        idx = SkipIndex.load(t.path, iname)
-        if idx is None:
-            raise ChDialectError(f"no skip index {iname!r}")
-        try:
-            return idx.materialize(spark)["files"]
-        except ValueError as e:
-            raise ChDialectError(str(e)) from e
-
-    mci = _CLEAR_INDEX_RE.match(sql)
-    if mci is not None:
-        from clickhouse_observability_spark.sources.skip_index import (
-            SkipIndex,
-        )
-
-        tname, iname = mci.groups()
-        t = _named_table(tname, logs, tables)
-        idx = SkipIndex.load(t.path, iname)
-        if idx is None:
-            raise ChDialectError(f"no skip index {iname!r}")
-        idx.clear()
-        return 0
-
-    mcc = _CLEAR_COL_RE.match(sql)
-    if mcc is not None:
-        from clickhouse_observability_spark.sources import mutations as MU
-
-        tname, if_exists, col, part = mcc.groups()
-        t = _named_table(tname, logs, tables)
-        from clickhouse_observability_spark.schema import LOGS_COLUMNS
-
-        if if_exists and col not in LOGS_COLUMNS \
-                and t.schema_ext.get(col) is None:
-            return 0  # CH: CLEAR COLUMN IF EXISTS no-ops silently
-        try:
-            return MU.clear_column(
-                spark, t.path, col, int(part))["matched_rows"]
-        except ValueError as e:
-            raise ChDialectError(str(e)) from e
-
-    mtr = _TRUNCATE_RE.match(sql)
-    if mtr is not None:
-        from clickhouse_observability_spark.sources.mutations import (
-            truncate_table,
-        )
-
-        if mtr.group(1).lower() != "logs" or logs is None:
-            raise ChDialectError("TRUNCATE supported for `logs` only")
-        return len(truncate_table(spark, logs.path)["dropped_months"])
-
-    mt = _TTL_RE.match(sql)
-    if mt is not None:
-        # the reference's exact statement: arm the TTL the retention
-        # job (apply_retention with no explicit days) enforces
-        from clickhouse_observability_spark.sources.retention import (
-            set_table_ttl,
-        )
-
-        tname, days = mt.groups()
-        if tname.lower() != "logs" or logs is None:
-            raise ChDialectError("MODIFY TTL supported for `logs` only")
-        set_table_ttl(logs.path, int(days))
-        return 0
-    mt = _TTL_GROUP_RE.match(sql)
-    if mt is not None:
-        from clickhouse_observability_spark.sources.retention import (
-            set_table_ttl,
-        )
-
-        tname, days, group_sql, set_sql = mt.groups()
-        if tname.lower() != "logs" or logs is None:
-            raise ChDialectError("MODIFY TTL supported for `logs` only")
-        group_by = [
-            " ".join(item).strip()
-            for item in _split_top_commas(_tokenize(group_sql))
-            if item
-        ]
-        set_exprs: dict[str, str] = {}
-        if set_sql:
-            for item in _split_top_commas(_tokenize(set_sql)):
-                if not item:
-                    continue
-                if len(item) < 3 or item[1] != "=":
-                    raise ChDialectError(
-                        "TTL GROUP BY SET expects `col = agg(expr)` "
-                        "assignments")
-                set_exprs[item[0]] = " ".join(item[2:])
-        try:
-            set_table_ttl(logs.path, int(days), group_by=group_by,
-                          set_exprs=set_exprs)
-        except ValueError as e:
-            raise ChDialectError(str(e)) from e
-        return 0
-    mt = _TTL_MULTI_RE.match(sql)
-    if mt is not None:
-        # comma-separated TTL expression: move rules (TO VOLUME /
-        # TO DISK), conditional deletes (DELETE WHERE <pred>, any
-        # number — CH allows one per predicate) + at most one
-        # unconditional DELETE horizon. The single-clause DELETE and
-        # GROUP BY forms matched above; GROUP BY inside a
-        # multi-clause expression is refused. Clauses split on
-        # TOP-LEVEL commas so predicates keep their IN lists /
-        # function arguments.
-        from clickhouse_observability_spark.sources.retention import (
-            set_table_ttl,
-        )
-
-        tname, body = mt.groups()
-        if tname.lower() != "logs" or logs is None:
-            raise ChDialectError("MODIFY TTL supported for `logs` only")
-        delete_days: int | None = None
-        tiers: list[dict] = []
-        delete_where: list[dict] = []
-        recompress: list[dict] = []
-        for item in _split_top_commas(_tokenize(body)):
-            clause = " ".join(item)
-            mc = _TTL_CLAUSE_RE.match(clause)
-            if mc is None:
-                raise ChDialectError(
-                    f"MODIFY TTL: unsupported clause {clause.strip()!r} "
-                    "(supported: ts + INTERVAL n DAY "
-                    "[DELETE [WHERE <pred>] | TO VOLUME 'v' | "
-                    "TO DISK 'd' | RECOMPRESS CODEC(ZSTD(l)|LZ4)], "
-                    "comma-separated; GROUP BY only as a single "
-                    "clause)")
-            days_s, is_delete, where, kind, vol, codec, lvl = mc.groups()
-            if kind:
-                tiers.append({"days": int(days_s), "volume": vol,
-                              "kind": kind.upper()})
-            elif where:
-                delete_where.append({"days": int(days_s),
-                                     "where": where.strip()})
-            elif codec:
-                recompress.append({
-                    "days": int(days_s), "codec": codec.upper(),
-                    "level": int(lvl) if lvl is not None else None})
-            else:  # bare horizon or explicit DELETE
-                if delete_days is not None:
-                    raise ChDialectError(
-                        "MODIFY TTL: more than one DELETE horizon")
-                delete_days = int(days_s)
-        try:
-            set_table_ttl(logs.path, delete_days, tiers=tiers,
-                          delete_where=delete_where,
-                          recompress=recompress)
-        except ValueError as e:
-            raise ChDialectError(str(e)) from e
-        return 0
-    mt = _TTL_REMOVE_RE.match(sql)
-    if mt is not None:
-        from clickhouse_observability_spark.sources.retention import (
-            set_table_ttl,
-        )
-
-        if mt.group(1).lower() != "logs" or logs is None:
-            raise ChDialectError("REMOVE TTL supported for `logs` only")
-        set_table_ttl(logs.path, None)
-        return 0
-    mt = _TTL_MATERIALIZE_RE.match(sql)
-    if mt is not None:
-        from clickhouse_observability_spark.sources.retention import (
-            apply_retention,
-            read_table_ttl_spec,
-        )
-
-        if mt.group(1).lower() != "logs" or logs is None:
-            raise ChDialectError(
-                "MATERIALIZE TTL supported for `logs` only")
-        if read_table_ttl_spec(logs.path) is None:
-            return 0  # nothing armed — CH no-ops too
-        res = apply_retention(spark, logs.path)
-        return (len(res.get("dropped_months") or [])
-                + len(res.get("collapsed_months") or [])
-                + sum(len(r["months"])
-                      for r in res.get("delete_where") or [])
-                + sum(len(v) for v in (res.get("column_ttl") or {})
-                      .values())
-                + sum(len(v) for v in (res.get("recompressed") or {})
-                      .values())
-                + sum(len(v) for v in (res.get("tiered") or {})
-                      .values()))
-
-    # -- schema evolution: metadata-only column DDL -------------------
-    for rex in (_ADD_COL_RE, _DROP_COL_RE, _RENAME_COL_RE,
-                _COMMENT_COL_RE, _MODIFY_COL_RE):
-        mcol = rex.match(sql)
-        if mcol is None:
+    parts = [
+        "CREATE TABLE logs (",
+        "  ts DateTime64(3, 'UTC'), service LowCardinality(String),",
+        f"  level LowCardinality(String){_ct('level')}, "
+        f"msg String{_ct('msg')}, attrs String{_ct('attrs')},",
+        f"  trace_id String{_ct('trace_id')}, "
+        f"span_id String{_ct('span_id')}",
+    ]
+    for line in logs.schema_ext.ddl_clauses():
+        parts[-1] += ","
+        parts.append(line)
+    for mv in logs.materialized_views:
+        if not mv.spec.get("projection"):
             continue
-        tname = mcol.group(1)
-        if tname.lower() != "logs" or logs is None:
-            raise ChDialectError("column DDL supported for `logs` only")
-        ext = logs.schema_ext
-        try:
-            if rex is _ADD_COL_RE:
-                _, ine, name, tail = mcol.groups()
-                ch_type, default, comment = _split_add_column_tail(tail)
-                ext.add_column(name, ch_type, default=default,
-                               if_not_exists=bool(ine), comment=comment)
-            elif rex is _DROP_COL_RE:
-                _, ie, name = mcol.groups()
-                ext.drop_column(name, if_exists=bool(ie))
-            elif rex is _RENAME_COL_RE:
-                _, old, new = mcol.groups()
-                ext.rename_column(old, new)
-            elif rex is _COMMENT_COL_RE:
-                _, name, comment = mcol.groups()
-                ext.comment_column(name, comment.replace("''", "'"))
-            else:  # MODIFY COLUMN: DEFAULT changes + COLUMN TTL
-                # (both metadata-only in CH too); a TYPE change
-                # rewrites every part in CH and is refused honestly
-                _, name, tail = mcol.groups()
-                toks = _tokenize(tail)
-                lows = [t.lower() for t in toks]
-                mct = re.match(
-                    r"^\s*(?:\w+(?:\([^)]*\))?\s+)?TTL\s+ts\s*\+\s*"
-                    r"INTERVAL\s+(\d+)\s+DAY\s*$",
-                    tail, re.IGNORECASE)
-                if lows[:2] == ["remove", "default"] and len(toks) == 2:
-                    ext.modify_default(name, None)
-                elif lows[:2] == ["remove", "ttl"] and len(toks) == 2:
-                    from clickhouse_observability_spark.sources. \
-                        retention import set_column_ttl
-
-                    set_column_ttl(logs.path, name, None)
-                elif mct is not None:
-                    # CH COLUMN TTL: `MODIFY COLUMN msg [String] TTL
-                    # ts + INTERVAL n DAY` — aged values revert to
-                    # the type default on the next retention pass
-                    from clickhouse_observability_spark.sources. \
-                        retention import set_column_ttl
-
-                    set_column_ttl(logs.path, name, int(mct.group(1)))
-                elif lows and lows[0] == "default":
-                    ext.modify_default(
-                        name, _mutation_expr(toks[1:]))
-                else:
-                    raise ChDialectError(
-                        "MODIFY COLUMN supports DEFAULT <expr> / "
-                        "REMOVE DEFAULT / TTL ts + INTERVAL n DAY / "
-                        "REMOVE TTL only; a type change rewrites "
-                        "every part in ClickHouse and is refused "
-                        "rather than silently cast on read (DROP + "
-                        "ADD under a new name is the explicit "
-                        "two-step)")
-        except ValueError as e:
-            raise ChDialectError(str(e)) from e
-        return 0
-
-    mm = _ALTER_MUT_RE.match(sql)
-    lw = _LW_DELETE_RE.match(sql) if mm is None else None
-    if mm is not None or lw is not None:
-        # CH mutations -> partition-scoped rewrite (sources/
-        # mutations.py). Returns the matched-row count, the useful
-        # analog of INSERT's inserted-row count (CH itself returns
-        # nothing and mutates asynchronously; ours is synchronous).
-        from clickhouse_observability_spark.schema import PARTITION_COLUMN
-        from clickhouse_observability_spark.sources.mutations import (
-            apply_mutation,
-        )
-
-        if mm is not None:
-            tname, op, rest = mm.groups()
+        sel = ", ".join(
+            [f"{d['sql']} AS {d['alias']}" for d in mv.spec["dims"]]
+            + [
+                f"{a['kind']}({a['arg_sql'] or ''}) AS {a['alias']}"
+                for a in mv.spec["aggs"]
+            ])
+        grp = ", ".join(d["alias"] for d in mv.spec["dims"])
+        parts[-1] += ","
+        parts.append(
+            f"  PROJECTION {mv.name} (SELECT {sel}"
+            + (f" GROUP BY {grp}" if grp else "") + ")")
+    parts += [
+        ") ENGINE = MergeTree",
+        "PARTITION BY toYYYYMM(ts)",
+        "ORDER BY (service, ts)",
+    ]
+    ttl_spec = read_table_ttl_spec(logs.path)
+    clauses = []
+    for r in sorted((ttl_spec or {}).get("to_volume") or [],
+                    key=lambda r: int(r["days"])):
+        clauses.append(
+            f"ts + INTERVAL {int(r['days'])} DAY "
+            f"TO {r.get('kind', 'VOLUME')} '{r['volume']}'")
+    for r in (ttl_spec or {}).get("delete_where") or []:
+        clauses.append(
+            f"ts + INTERVAL {int(r['days'])} DAY "
+            f"DELETE WHERE {r['where']}")
+    for r in (ttl_spec or {}).get("recompress") or []:
+        lvl = r.get("level")
+        codec = r["codec"] + ("" if lvl is None else f"({int(lvl)})")
+        clauses.append(
+            f"ts + INTERVAL {int(r['days'])} DAY "
+            f"RECOMPRESS CODEC({codec})")
+    if ttl_spec is not None and ttl_spec.get("retention_days") is not None:
+        days = ttl_spec["retention_days"]
+        gb = ttl_spec.get("group_by")
+        if gb:
+            clause = (f"ts + INTERVAL {days} DAY "
+                      f"GROUP BY {', '.join(gb)}")
+            sets = ttl_spec.get("set") or {}
+            if sets:
+                clause += " SET " + ", ".join(
+                    f"{c} = {e}" for c, e in sets.items())
+            clauses.append(clause)
         else:
-            tname, rest = lw.groups()
-            op = "delete"
-        if tname.lower() != "logs" or logs is None:
-            raise ChDialectError("mutations supported for `logs` only")
-        # CH `... [IN PARTITION p] WHERE pred` scopes the mutation to
-        # one partition: strip the clause (grammar places it directly
-        # before WHERE) and AND the partition key into the predicate —
-        # the pruned discovery scan then touches only that month.
-        # Token-level, not regex-on-raw-text: the phrase inside a
-        # string literal of the predicate must never match (a raw
-        # re.search would rewrite the predicate of a DESTRUCTIVE
-        # statement — r7 review finding).
-        rest, in_part = _strip_in_partition(rest)
-        assignments = None
-        if op.lower() == "update":
-            assignments, pred = _parse_update_tail(rest)
-        elif mm is not None:
-            toks = _tokenize(rest)
-            if not toks or toks[0].lower() != "where" or len(toks) == 1:
-                raise ChDialectError(
-                    "ALTER TABLE ... DELETE requires a WHERE clause "
-                    "(ClickHouse refuses unguarded whole-table deletes)")
-            pred = _mutation_expr(toks[1:])
-        else:
-            pred = _mutation_expr(_tokenize(rest))
-        if in_part is not None:
-            pred = f"({PARTITION_COLUMN} = {in_part}) AND ({pred})"
-        # stale-matview surfacing and refresh live on apply_mutation
-        # itself (the programmatic surface); through SQL the caller
-        # gets the matched-row count, mirroring INSERT's contract
-        res = apply_mutation(spark, logs.path, pred,
-                             assignments=assignments,
-                             command=sql.strip())
-        return res["matched_rows"]
+            clauses.append(f"ts + INTERVAL {days} DAY DELETE")
+    if clauses:
+        # renders exactly what MODIFY TTL re-parses (round-trip)
+        parts.append("TTL " + ", ".join(clauses))
+    return local_df(st.spark, [("\n".join(parts),)], "statement string")
 
-    me = _EXPLAIN_RE.match(sql)
-    if me is not None:
-        mode, inner = me.groups()
-        inner = _rewrite_system_tables(spark, inner, logs, query_log, tables)
-        if (mode or "").strip().lower() == "estimate":
-            if logs is None:
-                raise ChDialectError(
-                    "EXPLAIN ESTIMATE reads the logs table's part "
-                    "metadata; pass logs=")
-            return _explain_estimate(spark, logs, inner)
-        if (mode or "").strip().lower() == "syntax":
-            # CH EXPLAIN SYNTAX prints the rewritten query; the
-            # analog here IS the dialect translation
-            from clickhouse_observability_spark.session import local_df
-            return local_df(spark, [(translate(inner),)],
-                            "statement string")
-        if (mode or "").strip().lower() == "ast":
-            # CH EXPLAIN AST prints the parse tree; the analog is
-            # Spark's EXTENDED output, whose first section IS the
-            # parsed (pre-analysis) logical plan
-            return spark.sql("EXPLAIN EXTENDED " + translate(inner))
-        if (mode or "").strip().lower() == "pipeline":
-            # CH EXPLAIN PIPELINE shows the physical processor graph
-            # with parallelism; the analog is Spark's FORMATTED
-            # physical plan — operators + codegen stage spans, the
-            # same "what actually executes" tier
-            return spark.sql("EXPLAIN FORMATTED " + translate(inner))
-        # PLAN/default: Spark's own one-column plan frame
-        return spark.sql("EXPLAIN " + translate(inner))
 
-    ms = _INSERT_SELECT_RE.match(sql)
-    if ms is not None:
-        tname, col_list, select_sql = ms.groups()
-        if tname.lower() != "logs" or logs is None:
-            raise ChDialectError("INSERT supported into `logs` only")
-        cols = ([c.strip() for c in col_list.split(",")] if col_list
-                else list(_LOGS_DEFAULTS))
-        sel_ext = {c["name"]: c for c in logs.schema_ext.columns}
-        unknown = [c for c in cols
-                   if c not in _LOGS_DEFAULTS and c not in sel_ext]
-        if unknown:
-            raise ChDialectError(f"unknown logs columns: {unknown}")
-        inner = _rewrite_system_tables(spark, select_sql, logs, query_log, tables)
-        src = spark.sql(translate(inner))
-        if len(src.columns) != len(cols):
+def _freeze(st, m, logs):
+    # CH FREEZE: hardlink snapshot into _shadow/<name> — zero
+    # bytes copied; mutations/merges replace files, never modify
+    # them, so the frozen view stays consistent.
+    from clickhouse_observability_spark.sources import mutations as MU
+
+    _, part, name = m.groups()
+    return MU.freeze_table(
+        st.spark, logs.path,
+        month=int(part) if part else None, name=name)["files"]
+
+
+def _unfreeze(st, m):
+    from clickhouse_observability_spark.sources import mutations as MU
+
+    if st.logs is None:
+        raise ChDialectError("SYSTEM UNFREEZE needs the logs table")
+    MU.unfreeze_table(st.spark, st.logs.path, m.group(1))
+    return 0
+
+
+def _partition_op(st, m, t):
+    # CH partition lifecycle -> metadata-only directory moves
+    # (sources/mutations.py): DROP unlinks the month, DETACH
+    # parks it under `_detached/` (underscore dirs are invisible
+    # to Spark's listing — CH's detached/ semantics), ATTACH
+    # returns it. Returns the file count touched, the analog of
+    # OPTIMIZE's merged-file count.
+    from clickhouse_observability_spark.sources import mutations as MU
+
+    _, op, part = m.groups()
+    fn = {"drop": MU.drop_partition, "detach": MU.detach_partition,
+          "attach": MU.attach_partition}[op.lower()]
+    return fn(st.spark, t.path, int(part))["files"]
+
+
+def _move_to_volume(st, m, t):
+    from clickhouse_observability_spark.sources.tiering import (
+        move_partition_to_volume,
+    )
+
+    _, part, vol = m.groups()
+    return int(move_partition_to_volume(t.path, int(part), vol)["moved"])
+
+
+def _move_to_table(st, m, src, dst):
+    from clickhouse_observability_spark.sources import mutations as MU
+
+    return MU.move_partition_to_table(
+        st.spark, src.path, dst.path, int(m.group(2)))["files"]
+
+
+def _copy_partition(st, m, dst, src):
+    from clickhouse_observability_spark.sources import mutations as MU
+
+    _, op, part, _ = m.groups()
+    return MU.copy_partition_from(
+        st.spark, dst.path, src.path, int(part),
+        replace=op.lower() == "replace")["files"]
+
+
+def _rename_table(st, m):
+    from clickhouse_observability_spark.sources import mutations as MU
+
+    if st.tables is None:
+        raise ChDialectError(
+            "RENAME TABLE needs ch_sql(tables={...}) — the name "
+            "mapping is what the statement edits")
+    MU.rename_table(st.tables, *m.groups())
+    return 0
+
+
+def _exchange_tables(st, m):
+    from clickhouse_observability_spark.sources import mutations as MU
+
+    if st.tables is None:
+        raise ChDialectError(
+            "EXCHANGE TABLES needs ch_sql(tables={...}) — the "
+            "name mapping is what the statement edits")
+    MU.exchange_tables(st.tables, *m.groups())
+    return 0
+
+
+def _materialize_column(st, m, t):
+    from clickhouse_observability_spark.sources import mutations as MU
+
+    _, col, part = m.groups()
+    return MU.materialize_column(
+        st.spark, t.path, col,
+        month=None if part is None else int(part),
+    )["matched_rows"]
+
+
+def _add_index(st, m, t):
+    from clickhouse_observability_spark.sources.skip_index import (
+        SkipIndex,
+    )
+
+    _, iname, expr_ch, type_full, set_n, tok_params, gran = m.groups()
+    tf = type_full.lower()
+    if tf.startswith("set"):
+        type_, param = "set", int(set_n)
+    elif tf.startswith("tokenbf_v1"):
+        type_ = "tokenbf_v1"
+        param = [int(x.strip()) for x in tok_params.split(",")
+                 if x.strip()] or None
+    elif tf.startswith("bloom_filter"):
+        type_, param = "bloom_filter", None
+    else:
+        type_, param = "minmax", None
+    spark_expr = _mutation_expr(_tokenize(expr_ch))
+    if_not_exists = re.search(r"IF\s+NOT\s+EXISTS", st.sql,
+                              re.IGNORECASE) is not None
+    try:
+        SkipIndex.create(t.path, iname, spark_expr, type_,
+                         param=param, granularity=int(gran or 1))
+    except ValueError as e:
+        if not (if_not_exists and "already exists" in str(e)):
+            raise
+    return 0
+
+
+def _skip_index(t, iname: str, if_exists: bool = False):
+    from clickhouse_observability_spark.sources.skip_index import (
+        SkipIndex,
+    )
+
+    idx = SkipIndex.load(t.path, iname)
+    if idx is None and not if_exists:
+        raise ChDialectError(f"no skip index {iname!r}")
+    return idx
+
+
+def _drop_index(st, m, t):
+    _, if_exists, iname = m.groups()
+    idx = _skip_index(t, iname, bool(if_exists))
+    if idx is not None:
+        idx.drop()
+    return 0
+
+
+def _materialize_index(st, m, t):
+    return _skip_index(t, m.group(2)).materialize(st.spark)["files"]
+
+
+def _clear_index(st, m, t):
+    _skip_index(t, m.group(2)).clear()
+    return 0
+
+
+def _clear_column(st, m, t):
+    from clickhouse_observability_spark.schema import LOGS_COLUMNS
+    from clickhouse_observability_spark.sources import mutations as MU
+
+    _, if_exists, col, part = m.groups()
+    if if_exists and col not in LOGS_COLUMNS \
+            and t.schema_ext.get(col) is None:
+        return 0  # CH: CLEAR COLUMN IF EXISTS no-ops silently
+    return MU.clear_column(st.spark, t.path, col, int(part))["matched_rows"]
+
+
+def _truncate(st, m, logs):
+    from clickhouse_observability_spark.sources.mutations import (
+        truncate_table,
+    )
+
+    return len(truncate_table(st.spark, logs.path)["dropped_months"])
+
+
+def _modify_ttl(st, m, logs):
+    # the reference's exact statement: arm the TTL the retention
+    # job (apply_retention with no explicit days) enforces
+    from clickhouse_observability_spark.sources.retention import (
+        set_table_ttl,
+    )
+
+    set_table_ttl(logs.path, int(m.group(2)))
+    return 0
+
+
+def _ttl_group_by(st, m, logs):
+    from clickhouse_observability_spark.sources.retention import (
+        set_table_ttl,
+    )
+
+    _, days, group_sql, set_sql = m.groups()
+    group_by = [
+        " ".join(item).strip()
+        for item in _split_top_commas(_tokenize(group_sql))
+        if item
+    ]
+    set_exprs: dict[str, str] = {}
+    if set_sql:
+        for item in _split_top_commas(_tokenize(set_sql)):
+            if not item:
+                continue
+            if len(item) < 3 or item[1] != "=":
+                raise ChDialectError(
+                    "TTL GROUP BY SET expects `col = agg(expr)` "
+                    "assignments")
+            set_exprs[item[0]] = " ".join(item[2:])
+    set_table_ttl(logs.path, int(days), group_by=group_by,
+                  set_exprs=set_exprs)
+    return 0
+
+
+def _ttl_clauses(st, m, logs):
+    # comma-separated TTL expression: move rules (TO VOLUME /
+    # TO DISK), conditional deletes (DELETE WHERE <pred>, any
+    # number — CH allows one per predicate) + at most one
+    # unconditional DELETE horizon. The single-clause DELETE and
+    # GROUP BY forms matched above; GROUP BY inside a
+    # multi-clause expression is refused. Clauses split on
+    # TOP-LEVEL commas so predicates keep their IN lists /
+    # function arguments.
+    from clickhouse_observability_spark.sources.retention import (
+        set_table_ttl,
+    )
+
+    delete_days: int | None = None
+    tiers: list[dict] = []
+    delete_where: list[dict] = []
+    recompress: list[dict] = []
+    for item in _split_top_commas(_tokenize(m.group(2))):
+        clause = " ".join(item)
+        mc = _TTL_CLAUSE_RE.match(clause)
+        if mc is None:
             raise ChDialectError(
-                f"INSERT SELECT arity {len(src.columns)} != "
-                f"{len(cols)} target columns")
-        named = src.toDF(*cols)  # positional, CH INSERT SELECT rule
-        exprs = []
-        for c, default in _LOGS_DEFAULTS.items():
-            e = F.col(c) if c in cols else F.expr(default)
-            exprs.append(
-                e.cast("timestamp" if c == "ts" else "string").alias(c))
-        # evolved columns named in the INSERT ride along typed;
-        # omitted ones serve their DEFAULT on read (CH semantics)
-        for c in cols:
-            if c in sel_ext:
-                exprs.append(
-                    F.col(c).cast(sel_ext[c]["spark_type"]).alias(c))
-        # materialize BEFORE the append: a self-referential backfill
-        # (INSERT INTO logs SELECT ... FROM logs ...) would otherwise
-        # scan the very files the write is appending to. The eager
-        # localCheckpoint bounds that at one extra write of the
-        # inserted rows and doubles as the cheap row count INSERT's
-        # contract returns; a 100 TB backfill uses the programmatic
-        # LogsTable.insert with its own staged source instead.
-        batch = named.select(*exprs).localCheckpoint(eager=True)
-        try:
-            n = batch.count()
-            # materialized=True: insert() must not checkpoint the
-            # same rows a second time for its matview triggers —
-            # this checkpoint already serves both purposes
-            logs.insert(batch, materialized=True)
-        finally:
-            batch.unpersist()
-        return n
+                f"MODIFY TTL: unsupported clause {clause.strip()!r} "
+                "(supported: ts + INTERVAL n DAY "
+                "[DELETE [WHERE <pred>] | TO VOLUME 'v' | "
+                "TO DISK 'd' | RECOMPRESS CODEC(ZSTD(l)|LZ4)], "
+                "comma-separated; GROUP BY only as a single "
+                "clause)")
+        days_s, is_delete, where, kind, vol, codec, lvl = mc.groups()
+        if kind:
+            tiers.append({"days": int(days_s), "volume": vol,
+                          "kind": kind.upper()})
+        elif where:
+            delete_where.append({"days": int(days_s),
+                                 "where": where.strip()})
+        elif codec:
+            recompress.append({
+                "days": int(days_s), "codec": codec.upper(),
+                "level": int(lvl) if lvl is not None else None})
+        else:  # bare horizon or explicit DELETE
+            if delete_days is not None:
+                raise ChDialectError(
+                    "MODIFY TTL: more than one DELETE horizon")
+            delete_days = int(days_s)
+    set_table_ttl(logs.path, delete_days, tiers=tiers,
+                  delete_where=delete_where, recompress=recompress)
+    return 0
 
-    m = _INSERT_RE.match(sql)
-    if m is None:
-        sql = _rewrite_system_tables(spark, sql, logs, query_log, tables)
-        asof = _extract_asof_join(split_format_clause(sql)[0])
-        if asof is not None:
-            return _run_asof_join(spark, asof)
-        fill = _extract_with_fill(split_format_clause(sql)[0])
-        if fill is not None:
-            return _run_with_fill(spark, fill)
-        routed = _route_projection(spark, sql, logs)
-        if routed is not None:
-            return routed
-        return spark.sql(translate(sql))
 
-    table_name, col_list, values = m.groups()
-    if table_name.lower() != "logs" or logs is None:
-        raise ChDialectError("INSERT supported into `logs` only")
-    cols = [c.strip() for c in col_list.split(",")]
-    ext_cols = {c["name"]: c for c in logs.schema_ext.columns}
-    unknown = [c for c in cols
-               if c not in _LOGS_DEFAULTS and c not in ext_cols]
+def _remove_ttl(st, m, logs):
+    from clickhouse_observability_spark.sources.retention import (
+        set_table_ttl,
+    )
+
+    set_table_ttl(logs.path, None)
+    return 0
+
+
+def _materialize_ttl(st, m, logs):
+    from clickhouse_observability_spark.sources.retention import (
+        apply_retention,
+        read_table_ttl_spec,
+    )
+
+    if read_table_ttl_spec(logs.path) is None:
+        return 0  # nothing armed — CH no-ops too
+    res = apply_retention(st.spark, logs.path)
+    return (len(res.get("dropped_months") or [])
+            + len(res.get("collapsed_months") or [])
+            + sum(len(r["months"])
+                  for r in res.get("delete_where") or [])
+            + sum(len(v) for v in (res.get("column_ttl") or {})
+                  .values())
+            + sum(len(v) for v in (res.get("recompressed") or {})
+                  .values())
+            + sum(len(v) for v in (res.get("tiered") or {})
+                  .values()))
+
+
+# -- schema evolution: metadata-only column DDL ----------------------
+def _add_column(st, m, logs):
+    _, ine, name, tail = m.groups()
+    ch_type, default, comment = _split_add_column_tail(tail)
+    logs.schema_ext.add_column(name, ch_type, default=default,
+                               if_not_exists=bool(ine), comment=comment)
+    return 0
+
+
+def _drop_column(st, m, logs):
+    _, ie, name = m.groups()
+    logs.schema_ext.drop_column(name, if_exists=bool(ie))
+    return 0
+
+
+def _rename_column(st, m, logs):
+    _, old, new = m.groups()
+    logs.schema_ext.rename_column(old, new)
+    return 0
+
+
+def _comment_column(st, m, logs):
+    _, name, comment = m.groups()
+    logs.schema_ext.comment_column(name, comment.replace("''", "'"))
+    return 0
+
+
+def _modify_column(st, m, logs):
+    # MODIFY COLUMN: DEFAULT changes + COLUMN TTL (both
+    # metadata-only in CH too); a TYPE change rewrites every part in
+    # CH and is refused honestly
+    from clickhouse_observability_spark.sources.retention import (
+        set_column_ttl,
+    )
+
+    _, name, tail = m.groups()
+    toks = _tokenize(tail)
+    lows = [t.lower() for t in toks]
+    mct = re.match(
+        r"^\s*(?:\w+(?:\([^)]*\))?\s+)?TTL\s+ts\s*\+\s*"
+        r"INTERVAL\s+(\d+)\s+DAY\s*$",
+        tail, re.IGNORECASE)
+    if lows[:2] == ["remove", "default"] and len(toks) == 2:
+        logs.schema_ext.modify_default(name, None)
+    elif lows[:2] == ["remove", "ttl"] and len(toks) == 2:
+        set_column_ttl(logs.path, name, None)
+    elif mct is not None:
+        # CH COLUMN TTL: `MODIFY COLUMN msg [String] TTL
+        # ts + INTERVAL n DAY` — aged values revert to
+        # the type default on the next retention pass
+        set_column_ttl(logs.path, name, int(mct.group(1)))
+    elif lows and lows[0] == "default":
+        logs.schema_ext.modify_default(name, _mutation_expr(toks[1:]))
+    else:
+        raise ChDialectError(
+            "MODIFY COLUMN supports DEFAULT <expr> / "
+            "REMOVE DEFAULT / TTL ts + INTERVAL n DAY / "
+            "REMOVE TTL only; a type change rewrites "
+            "every part in ClickHouse and is refused "
+            "rather than silently cast on read (DROP + "
+            "ADD under a new name is the explicit "
+            "two-step)")
+    return 0
+
+
+def _mutate(st, m, logs):
+    # CH mutations -> partition-scoped rewrite (sources/
+    # mutations.py). Returns the matched-row count, the useful
+    # analog of INSERT's inserted-row count (CH itself returns
+    # nothing and mutates asynchronously; ours is synchronous).
+    from clickhouse_observability_spark.schema import PARTITION_COLUMN
+    from clickhouse_observability_spark.sources.mutations import (
+        apply_mutation,
+    )
+
+    alter = m.re is _ALTER_MUT_RE
+    op, rest = (m.group(2), m.group(3)) if alter else ("delete", m.group(2))
+    # CH `... [IN PARTITION p] WHERE pred` scopes the mutation to
+    # one partition: strip the clause (grammar places it directly
+    # before WHERE) and AND the partition key into the predicate —
+    # the pruned discovery scan then touches only that month.
+    # Token-level, not regex-on-raw-text: the phrase inside a
+    # string literal of the predicate must never match (a raw
+    # re.search would rewrite the predicate of a DESTRUCTIVE
+    # statement — r7 review finding).
+    rest, in_part = _strip_in_partition(rest)
+    assignments = None
+    if op.lower() == "update":
+        assignments, pred = _parse_update_tail(rest)
+    elif alter:
+        toks = _tokenize(rest)
+        if not toks or toks[0].lower() != "where" or len(toks) == 1:
+            raise ChDialectError(
+                "ALTER TABLE ... DELETE requires a WHERE clause "
+                "(ClickHouse refuses unguarded whole-table deletes)")
+        pred = _mutation_expr(toks[1:])
+    else:
+        pred = _mutation_expr(_tokenize(rest))
+    if in_part is not None:
+        pred = f"({PARTITION_COLUMN} = {in_part}) AND ({pred})"
+    # stale-matview surfacing and refresh live on apply_mutation
+    # itself (the programmatic surface); through SQL the caller
+    # gets the matched-row count, mirroring INSERT's contract
+    res = apply_mutation(st.spark, logs.path, pred,
+                         assignments=assignments, command=st.sql.strip())
+    return res["matched_rows"]
+
+
+def _explain(st, m):
+    mode, inner = m.groups()
+    mode = (mode or "").strip().lower()
+    if mode == "estimate":
+        if st.logs is None:
+            raise ChDialectError(
+                "EXPLAIN ESTIMATE reads the logs table's part "
+                "metadata; pass logs=")
+        return _explain_estimate(st.spark, st.logs, inner)
+    if mode == "syntax":
+        # CH EXPLAIN SYNTAX prints the rewritten query; the
+        # analog here IS the dialect translation
+        from clickhouse_observability_spark.session import local_df
+        return local_df(st.spark, [(translate(inner),)],
+                        "statement string")
+    # AST: CH prints the parse tree; Spark's EXTENDED output opens
+    # with the parsed (pre-analysis) logical plan. PIPELINE: CH
+    # shows the physical processor graph; Spark's FORMATTED physical
+    # plan (operators + codegen stage spans) is the same "what
+    # actually executes" tier. PLAN/default: Spark's own plan frame.
+    prefix = {"ast": "EXPLAIN EXTENDED ",
+              "pipeline": "EXPLAIN FORMATTED "}.get(mode, "EXPLAIN ")
+    return _spark_sql(st, inner, prefix)
+
+
+def _logs_columns(logs, cols: list[str]) -> dict:
+    """The evolved columns of `logs` by name; raises on any of
+    `cols` that is neither a base nor an evolved column."""
+    ext = {c["name"]: c for c in logs.schema_ext.columns}
+    unknown = [c for c in cols if c not in _LOGS_DEFAULTS and c not in ext]
     if unknown:
         raise ChDialectError(f"unknown logs columns: {unknown}")
+    return ext
+
+
+def _insert_select(st, m, logs):
+    _, col_list, select_sql = m.groups()
+    cols = ([c.strip() for c in col_list.split(",")] if col_list
+            else list(_LOGS_DEFAULTS))
+    sel_ext = _logs_columns(logs, cols)
+    src = _spark_sql(st, select_sql)
+    if len(src.columns) != len(cols):
+        raise ChDialectError(
+            f"INSERT SELECT arity {len(src.columns)} != "
+            f"{len(cols)} target columns")
+    named = src.toDF(*cols)  # positional, CH INSERT SELECT rule
+    exprs = []
+    for c, default in _LOGS_DEFAULTS.items():
+        e = F.col(c) if c in cols else F.expr(default)
+        exprs.append(
+            e.cast("timestamp" if c == "ts" else "string").alias(c))
+    # evolved columns named in the INSERT ride along typed;
+    # omitted ones serve their DEFAULT on read (CH semantics)
+    for c in cols:
+        if c in sel_ext:
+            exprs.append(
+                F.col(c).cast(sel_ext[c]["spark_type"]).alias(c))
+    # materialize BEFORE the append: a self-referential backfill
+    # (INSERT INTO logs SELECT ... FROM logs ...) would otherwise
+    # scan the very files the write is appending to. The eager
+    # localCheckpoint bounds that at one extra write of the
+    # inserted rows and doubles as the cheap row count INSERT's
+    # contract returns; a 100 TB backfill uses the programmatic
+    # LogsTable.insert with its own staged source instead.
+    batch = named.select(*exprs).localCheckpoint(eager=True)
+    try:
+        n = batch.count()
+        # materialized=True: insert() must not checkpoint the
+        # same rows a second time for its matview triggers —
+        # this checkpoint already serves both purposes
+        logs.insert(batch, materialized=True)
+    finally:
+        batch.unpersist()
+    return n
+
+
+def _insert_values(st, m, logs):
+    _, col_list, values = m.groups()
+    cols = [c.strip() for c in col_list.split(",")]
+    ext_cols = _logs_columns(logs, cols)
     tuples, i = [], 0
     toks = _tokenize(values)
     while i < len(toks):
@@ -6262,6 +6121,126 @@ def _ch_sql_stmt(
             exprs.append(
                 f"CAST({given[c]} AS {ext_cols[c]['spark_type']}) AS {c}")
         selects.append("SELECT " + ", ".join(exprs))
-    batch = spark.sql(" UNION ALL ".join(selects))
-    logs.insert(batch)
+    logs.insert(st.spark.sql(" UNION ALL ".join(selects)))
     return len(tuples)
+
+
+def _query(st):
+    """Everything no statement regex claims: SELECT / DESCRIBE /
+    plain Spark statements. ASOF JOIN and WITH FILL run through their
+    operators, an aggregate a projection covers is served from its
+    states, the rest runs as translated Spark SQL."""
+    base = split_format_clause(st.sql)[0]
+    asof = _extract_asof_join(base)
+    if asof is not None:
+        return _run_asof_join(st, asof)
+    fill = _extract_with_fill(base)
+    if fill is not None:
+        return _run_with_fill(st, fill)
+    routed = _route_projection(st)
+    return routed if routed is not None else _spark_sql(st, st.sql)
+
+
+# The statement table, in match order: the first regex that matches
+# picks the handler. The middle field says what the dispatcher
+# resolves and passes on: None = nothing; a string = group 1 must
+# name the attached `logs` table (the string names the statement in
+# the refusal); a tuple = the groups that name tables, resolved
+# through `tables=` then `logs`.
+_STATEMENTS = (
+    (_ENGINE_DDL_RE, None, _create_table),
+    (_OUTFILE_RE, None, _into_outfile),
+    (_MV_CREATE_RE, None, _create_matview),
+    (_DROP_VIEW_RE, None, _drop_view),
+    (_UNDROP_TABLE_RE, None, _undrop_table),
+    (_PROJ_ADD_RE, "projections", _add_projection),
+    (_PROJ_DROP_RE, None, _drop_projection),
+    (_PROJ_MAT_RE, None, _materialize_projection),
+    (_OPTIMIZE_RE, "OPTIMIZE", _optimize),
+    (_SHOW_TABLES_RE, None, _show_tables),
+    (_CHECK_TABLE_RE, "CHECK TABLE", _check_table),
+    (_SHOW_CREATE_RE, "SHOW CREATE", _show_create),
+    (_FREEZE_RE, "FREEZE", _freeze),
+    (_UNFREEZE_RE, None, _unfreeze),
+    (_PART_OP_RE, (1,), _partition_op),
+    (_MOVE_PART_VOL_RE, (1,), _move_to_volume),
+    (_MOVE_PART_RE, (1, 3), _move_to_table),
+    (_COPY_PART_RE, (1, 4), _copy_partition),
+    (_RENAME_TABLE_RE, None, _rename_table),
+    (_EXCHANGE_RE, None, _exchange_tables),
+    (_MAT_COL_RE, (1,), _materialize_column),
+    (_ADD_INDEX_RE, (1,), _add_index),
+    (_DROP_INDEX_RE, (1,), _drop_index),
+    (_MAT_INDEX_RE, (1,), _materialize_index),
+    (_CLEAR_INDEX_RE, (1,), _clear_index),
+    (_CLEAR_COL_RE, (1,), _clear_column),
+    (_TRUNCATE_RE, "TRUNCATE", _truncate),
+    (_TTL_RE, "MODIFY TTL", _modify_ttl),
+    (_TTL_GROUP_RE, "MODIFY TTL", _ttl_group_by),
+    (_TTL_MULTI_RE, "MODIFY TTL", _ttl_clauses),
+    (_TTL_REMOVE_RE, "REMOVE TTL", _remove_ttl),
+    (_TTL_MATERIALIZE_RE, "MATERIALIZE TTL", _materialize_ttl),
+    (_ADD_COL_RE, "column DDL", _add_column),
+    (_DROP_COL_RE, "column DDL", _drop_column),
+    (_RENAME_COL_RE, "column DDL", _rename_column),
+    (_COMMENT_COL_RE, "column DDL", _comment_column),
+    (_MODIFY_COL_RE, "column DDL", _modify_column),
+    (_ALTER_MUT_RE, "mutations", _mutate),
+    (_LW_DELETE_RE, "mutations", _mutate),
+    (_EXPLAIN_RE, None, _explain),
+    (_INSERT_SELECT_RE, "INSERT", _insert_select),
+    (_INSERT_RE, "INSERT", _insert_values),
+)
+
+
+def ch_sql(
+    spark: SparkSession,
+    sql: str,
+    logs=None,
+    views: dict[str, DataFrame] | None = None,
+    query_log=None,
+    tables: dict | None = None,
+):
+    """Execute one ClickHouse SQL statement.
+
+    `logs`: a LogsTable — readable as `logs` in SELECT / DESCRIBE
+    (index-pruned when a tokenbf/set/bloom index admits the
+    statement), the write path for INSERT (returns the inserted-row
+    count) and the target of the DDL statements. `views`: extra
+    name -> DataFrame mappings. `query_log`: a QueryLog whose ring
+    backs `system.query_log`. `tables`: extra name -> LogsTable
+    mappings for the multi-table statements (MOVE/REPLACE/ATTACH
+    PARTITION across tables, RENAME TABLE, EXCHANGE TABLES) —
+    RENAME/EXCHANGE edit this dict IN PLACE, the analog of CH
+    Atomic's metadata-only name mapping; mentioned entries are
+    readable too.
+
+    Every name the statement reads is bound for this statement only
+    (_spark_sql): nothing is left in the session catalog, and
+    concurrent calls on one session cannot see each other's `logs`.
+    The statement is picked from _STATEMENTS; a ValueError from any
+    step surfaces as ChDialectError.
+    """
+    st = _Stmt(spark, sql, logs, views, query_log, tables)
+    try:
+        for rex, target, handler in _STATEMENTS:
+            m = rex.match(sql)
+            if m is None:
+                continue
+            if isinstance(target, str):
+                if m.group(1).lower() != "logs" or logs is None:
+                    raise ChDialectError(
+                        f"{target} supported for `logs` only")
+                res = handler(st, m, logs)
+            elif target:
+                res = handler(st, m, *(_named_table(m.group(g), logs, tables)
+                                       for g in target))
+            else:
+                res = handler(st, m)
+            if res is not _DECLINE:
+                return res
+        return _query(st)
+    except ChDialectError:
+        raise
+    except ValueError as e:
+        raise ChDialectError(str(e)) from e

@@ -267,7 +267,15 @@ def finalize(
     quantiles: dict[str, float] | None = None,
     topk_k: int = 5,
 ) -> DataFrame:
-    """Partial states -> human-readable answers (the SELECT step)."""
+    """Partial states -> human-readable answers (the SELECT step).
+
+    Explicit `quantiles` need the `value_hist` state; asking for them
+    over states without it raises instead of silently dropping them.
+    """
+    if quantiles and "value_hist" not in states.columns:
+        raise ValueError(
+            f"quantiles {sorted(quantiles)} need the value_hist state, "
+            "which these states do not carry")
     qs = {"p50": 0.50, "p95": 0.95, "p99": 0.99} if quantiles is None else quantiles
     keep = [c for c in states.columns if c not in STATE_COLS]
     topk = (

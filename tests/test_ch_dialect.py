@@ -238,6 +238,24 @@ def test_numbers_table_function_and_explain(spark, logs):
     assert "count_if" in plan or "Aggregate" in plan
 
 
+def test_bound_table_name_keeps_alias_meaning(spark, logs):
+    """A statement may name an output column after a table it reads:
+    only the relation references (FROM, `logs.` qualifiers) bind to
+    the table, the alias and its ORDER BY use stay a column."""
+    ch_sql(spark, (
+        "INSERT INTO logs (ts, service, level) VALUES "
+        "(now(), 'a', 'INFO'), (now(), 'a', 'WARN'), (now(), 'b', 'INFO')"
+    ), logs=logs)
+    rows = ch_sql(spark, (
+        "SELECT service, count() AS logs FROM logs GROUP BY service "
+        "ORDER BY logs DESC"), logs=logs).collect()
+    assert [(r.service, r.logs) for r in rows] == [("a", 2), ("b", 1)]
+    row = ch_sql(spark, (
+        "SELECT logs.service AS logs FROM logs WHERE logs.level = 'WARN'"
+    ), logs=logs).collect()[0]
+    assert row.logs == "a"
+
+
 def test_insert_fills_missing_columns(spark, logs):
     n = ch_sql(
         spark,
@@ -632,6 +650,21 @@ def test_dict_functions(spark):
         translate("SELECT dictGet('svc_meta', owner, s) FROM t")
     with pytest.raises(ChDialectError, match="dictGet\\(dict"):
         translate("SELECT dictGet('svc_meta', 'owner') FROM t")
+
+
+def test_dict_functions_over_views_mapping(spark):
+    """A dictionary passed as a `views=` entry is bound for the
+    statement like any other name it reads — dictGet's string-literal
+    reference included."""
+    meta = spark.createDataFrame([("api", "team-a")],
+                                 "key string, owner string")
+    src = spark.createDataFrame([("api",), ("db",)], "service string")
+    rows = ch_sql(spark, (
+        "SELECT service, dictGet('svc_map', 'owner', service) AS owner, "
+        "dictHas('svc_map', service) AS has FROM src ORDER BY service"),
+        views={"svc_map": meta, "src": src}).collect()
+    assert [(r.service, r.owner, r.has) for r in rows] == [
+        ("api", "team-a", True), ("db", None, False)]
 
 
 def test_any_aggregate_vs_quantifier(spark):

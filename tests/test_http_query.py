@@ -46,6 +46,19 @@ def test_query_handler_select(spark, logs):
     assert body["data"][1] == {"service": "orders", "warns": 1}
 
 
+def test_query_reads_attached_table_once(spark, logs, monkeypatch):
+    """With a table attached, /v1/query leaves reading it to ch_sql:
+    one listing of the table per statement, not a provider read that
+    ch_sql would shadow anyway."""
+    real, reads = logs.read, []
+    monkeypatch.setattr(logs, "read",
+                        lambda: reads.append(1) or real())
+    api = LogsApi(logs.read, logs_table=logs)
+    status, body = api.query_handler("SELECT count() AS n FROM logs")
+    assert status == 200 and body["data"] == [{"n": 3}]
+    assert len(reads) == 1
+
+
 def test_query_handler_insert_and_errors(spark, logs):
     api = LogsApi(logs.read, logs_table=logs)
     status, body = api.query_handler(

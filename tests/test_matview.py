@@ -35,14 +35,15 @@ def logs(spark, tmp_path):
     return t
 
 
-def _expected(spark):
+def _expected(spark, logs):
     return {
         (r.h, r.service): (r.n, r.avg_len, r.traces, r.max_level)
         for r in spark.sql(
             "SELECT date_trunc('hour', ts) AS h, service, "
             "count(*) AS n, avg(length(msg)) AS avg_len, "
             "count(DISTINCT trace_id) AS traces, max(level) AS max_level "
-            "FROM logs WHERE level != 'DEBUG' GROUP BY 1, 2"
+            "FROM {logs} WHERE level != 'DEBUG' GROUP BY 1, 2",
+            logs=logs.read(),
         ).collect()
     }
 
@@ -65,7 +66,7 @@ def test_mv_trigger_incremental_and_select(spark, logs):
     _ins(spark, logs, "2024-03-01 11:05:00", "web", "ERROR", "boom", "t3")
     # filtered rows never reach the view
     _ins(spark, logs, "2024-03-01 10:10:00", "api", "DEBUG", "noise", "t4")
-    assert _got(spark, logs) == _expected(spark)
+    assert _got(spark, logs) == _expected(spark, logs)
     # the store grew by increments, not rewrites: ≥2 state rows for
     # the api@10h key before compaction
     mv = logs.materialized_views[0]
@@ -94,7 +95,7 @@ def test_mv_compact_preserves_reads(spark, logs):
 def test_mv_populate_backfills(spark, logs):
     _ins(spark, logs, "2024-03-01 09:00:00", "api", "INFO", "pre", "t0")
     ch_sql(spark, MV_DDL.replace(" AS ", " POPULATE AS ", 1), logs=logs)
-    assert _got(spark, logs) == _expected(spark)
+    assert _got(spark, logs) == _expected(spark, logs)
 
 
 def test_mv_persistence_reattaches(spark, logs):
@@ -105,7 +106,7 @@ def test_mv_persistence_reattaches(spark, logs):
     t2 = LogsTable(spark, logs.path)
     assert [v.name for v in t2.materialized_views] == ["svc_hourly"]
     _ins(spark, t2, "2024-03-01 12:00:00", "web", "INFO", "y", "t2")
-    assert _got(spark, t2) == _expected(spark)
+    assert _got(spark, t2) == _expected(spark, t2)
     # DROP VIEW detaches, deletes, and clears the lazy temp view so a
     # later read can't hit a stale frame
     ch_sql(spark, "DROP VIEW svc_hourly", logs=t2)
@@ -124,9 +125,9 @@ def test_mv_refresh_repairs(spark, logs):
     logs.materialized_views = []
     _ins(spark, logs, "2024-03-01 11:00:00", "web", "INFO", "y", "t2")
     logs.materialized_views = [mv]
-    assert _got(spark, logs) != _expected(spark)
+    assert _got(spark, logs) != _expected(spark, logs)
     mv.refresh(logs.read())
-    assert _got(spark, logs) == _expected(spark)
+    assert _got(spark, logs) == _expected(spark, logs)
 
 
 def test_mv_spec_errors(spark, logs):
@@ -304,7 +305,7 @@ def test_projection_routes_matching_aggregates(spark, tmp_path):
             for r in spark.sql(
                 "SELECT date_trunc('hour', ts) AS h, service, "
                 "count(*) AS n, avg(length(msg)) AS avg_len "
-                "FROM logs GROUP BY 1, 2").collect()}
+                "FROM {logs} GROUP BY 1, 2", logs=t.read()).collect()}
     assert got == base
 
     # COARSER grain re-merges states (dims subset), avg from sum+count

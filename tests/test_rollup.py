@@ -108,6 +108,20 @@ def test_zero_and_negative_values(spark):
         assert abs(r["m"] - r["value"]) <= tol * abs(r["value"]) + 1e-12
 
 
+def test_finalize_refuses_quantiles_without_value_hist(spark):
+    """Explicit quantiles over states that carry no value_hist raise;
+    the default (quantiles=None) still finalizes without them."""
+    df = spark.createDataFrame(
+        [Row(ts="2024-01-01 00:00:00", event_type="t", user_id=1,
+             value=1.0)]
+    ).withColumn("ts", F.to_timestamp("ts"))
+    states = R.build_rollup(df, "hour", ("event_type",)).drop("value_hist")
+    with pytest.raises(ValueError, match="value_hist"):
+        R.finalize(states, quantiles={"p50": 0.5})
+    fin = R.finalize(states).collect()[0]
+    assert fin["cnt"] == 1 and "p50" not in fin.asDict()
+
+
 def test_append_increments_then_compact(spark, sf_med, tmp_path):
     ev = load_table(spark, sf_med, "events")
     path = str(tmp_path / "rollup")

@@ -569,23 +569,70 @@ def test_prune_requires_depth0_from_logs(spark, logs):
     assert [r.n_logs for r in rows] == [n_logs_total]
 
 
-def test_pruned_view_is_restored_after_statement(spark, logs):
-    """ADVICE r8 (low): the narrowed `logs` temp view must not leak
-    to out-of-band spark.sql readers after a pruning ch_sql call."""
+def _session_views(spark):
+    return {t.name for t in spark.catalog.listTables()}
+
+
+def test_statement_views_never_leak(spark, logs):
+    """Every name a statement reads is bound for that statement only:
+    after a pruning ch_sql that returns, and after statements that
+    raise part-way, the session catalog holds nothing they bound —
+    and the returned pruned frame still collects the right rows (its
+    plan was bound before the views dropped)."""
     ch_sql(spark, (
         "ALTER TABLE logs ADD INDEX toks msg TYPE "
         "tokenbf_v1(8192, 4, 0)"), logs=logs)
     ch_sql(spark, "ALTER TABLE logs MATERIALIZE INDEX toks", logs=logs)
-    full = logs.read().count()
+    before = _session_views(spark)
     df = ch_sql(spark, "SELECT msg FROM logs WHERE hasToken(msg, 'zeta')",
                 logs=logs)
     assert len(df.inputFiles()) < len(logs.read().inputFiles())
-    # out-of-band reader sees the FULL table again
-    assert spark.sql("SELECT count(*) AS n FROM logs").collect()[0].n \
-        == full
-    # and the pruned result frame still answers correctly (its plan
-    # was bound before restoration)
+    assert _session_views(spark) == before
+    with pytest.raises(Exception, match="no_such_col"):
+        ch_sql(spark, ("SELECT no_such_col FROM logs "
+                       "WHERE hasToken(msg, 'zeta')"), logs=logs)
+    assert _session_views(spark) == before
+    other = spark.createDataFrame([("x",)], "msg string")
+    with pytest.raises(Exception, match="no_such_col"):
+        ch_sql(spark, ("SELECT no_such_col FROM other, system.parts, "
+                       "logs"), logs=logs, views={"other": other})
+    assert _session_views(spark) == before
     assert [r.msg for r in df.collect()] == ["zeta eta theta"]
+
+
+def test_concurrent_pruned_statements_are_isolated(spark, tmp_path):
+    """One shared session serves concurrent statements (the HTTP
+    server's request threads). Each statement binds its own
+    index-pruned `logs`, so no answer reads the file set another
+    statement pruned to: 4 threads x 25 hasToken counts over one
+    file per token must all be exact."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    t = LogsTable(spark, str(tmp_path / "logs"))
+    t.init_schema()
+    # one month, hence one file, per token
+    rows = ", ".join(
+        f"('{2023 + i // 12}-{i % 12 + 1:02d}-01 10:00:00', 'api', "
+        f"'INFO', 'tok{i:03d}')" for i in range(25))
+    ch_sql(spark, "INSERT INTO logs (ts, service, level, msg) VALUES "
+           + rows, logs=t)
+    assert len(t.read().inputFiles()) == 25
+    ch_sql(spark, (
+        "ALTER TABLE logs ADD INDEX toks msg TYPE "
+        "tokenbf_v1(8192, 4, 0)"), logs=t)
+    ch_sql(spark, "ALTER TABLE logs MATERIALIZE INDEX toks", logs=t)
+    before = _session_views(spark)
+
+    def count_tokens(k):
+        return [ch_sql(spark, (
+            f"SELECT count() AS n FROM logs WHERE "
+            f"hasToken(msg, 'tok{(7 * k + j) % 25:03d}')"),
+            logs=t).collect()[0].n for j in range(25)]
+
+    with ThreadPoolExecutor(4) as pool:
+        answers = [n for ns in pool.map(count_tokens, range(4)) for n in ns]
+    assert answers == [1] * 100
+    assert _session_views(spark) == before
 
 
 def test_hastoken_splits_on_underscore(spark, logs):
