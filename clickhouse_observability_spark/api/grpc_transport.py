@@ -19,12 +19,14 @@ dependencies:
   The ts fallback itself lives in the normalize step
   (functions/timeparse.py), exactly where the reference parses it at
   the service boundary;
-- a gRPC-Web server (`serve_grpc_web`): the gRPC framing that works
-  over HTTP/1.1 — POST /logs.v1.LogService/BatchWrite with
-  `application/grpc-web+proto` 5-byte-prefixed frames and a trailers
-  frame — servable by the stdlib HTTP server and e2e-tested with a
-  plain socket client. The HTTP/2 `application/grpc` flavor stock
-  gRPC clients speak is `api/http2_transport.py` (h2c).
+- one gRPC server (`serve_grpc_web`) on one port for both wire
+  flavors: it peeks at each new connection, hands one that opens with
+  the HTTP/2 preface to the h2c connection loop in
+  `api/http2_transport.py` (stock `application/grpc`), and serves any
+  other as gRPC-Web over HTTP/1.1 (`application/grpc-web+proto`
+  5-byte-prefixed frames and a trailers frame). Both flavors share one
+  method table, one exception -> grpc-status mapping (`dispatch`) and
+  one pair of framing helpers (`_frame` / `unframe`).
 """
 
 from __future__ import annotations
@@ -209,7 +211,7 @@ class LogServiceHandler:
 
 
 # ---------------------------------------------------------------------------
-# gRPC-Web transport (HTTP/1.1-compatible gRPC framing; stdlib-servable)
+# gRPC transport: one listener, gRPC-Web over HTTP/1.1 and h2c over HTTP/2
 # ---------------------------------------------------------------------------
 
 _GRPC_WEB_CT = "application/grpc-web+proto"
@@ -230,16 +232,37 @@ def unframe(body: bytes) -> list[tuple[int, bytes]]:
     return frames
 
 
+def dispatch(
+    methods: Mapping[str, Callable[[bytes], bytes]], path: str, body: bytes
+) -> tuple[bytes, int, str]:
+    """Run one call for either wire flavor: framed request body in,
+    (framed response body, grpc-status, grpc-message) out.
+
+    One response message per request message: that is unary
+    BatchWrite, and the bidi reflection stream once its requests are
+    fully buffered. An unknown `:path` is UNIMPLEMENTED (12); a handler
+    error is UNKNOWN (2), what grpc-go returns for a non-status error.
+    """
+    method = methods.get(path)
+    if method is None:
+        return b"", 12, "unknown method"
+    messages = [p for f, p in unframe(body) if f == 0] or [b""]
+    try:
+        return b"".join(_frame(0, method(m)) for m in messages), 0, ""
+    except Exception as e:
+        return b"", 2, type(e).__name__
+
+
 def serve_grpc_web(handler: LogServiceHandler, host: str = "127.0.0.1", port: int = 8081):
-    """gRPC-Web server for LogService (reference serves gRPC on :8081,
+    """gRPC server for LogService (reference serves gRPC on :8081,
     cmd/server/main.go:74-88). Returns the server; run
     `server.serve_forever()` in a thread, `.shutdown()` to stop.
 
-    Unary gRPC-Web exchange: request = one 0x00 frame of
-    BatchWriteRequest bytes; response = one 0x00 frame of
-    BatchWriteResponse bytes + one 0x80 trailers frame carrying
-    `grpc-status: 0`. Errors map to grpc-status 2 (UNKNOWN) /
-    12 (UNIMPLEMENTED for unknown methods), matching grpc codes.
+    One port speaks both wire flavors. A connection that opens with
+    the HTTP/2 preface is native `application/grpc` (h2c, what stock
+    gRPC clients send); any other is gRPC-Web over HTTP/1.1: request =
+    one 0x00 frame, response = 0x00 frames + one 0x80 trailers frame
+    carrying `grpc-status`.
 
     Server reflection is registered alongside LogService (reference
     cmd/server/main.go:79-81): grpc.reflection.v1alpha list/describe
@@ -251,6 +274,10 @@ def serve_grpc_web(handler: LogServiceHandler, host: str = "127.0.0.1", port: in
     from clickhouse_observability_spark.api.grpc_reflection import (
         REFLECTION_METHOD_PATH,
         handle_reflection,
+    )
+    from clickhouse_observability_spark.api.http2_transport import (
+        _Conn,
+        opens_with_preface,
     )
 
     methods: dict[str, Callable[[bytes], bytes]] = {
@@ -264,31 +291,24 @@ def serve_grpc_web(handler: LogServiceHandler, host: str = "127.0.0.1", port: in
         def log_message(self, *a):  # silence
             pass
 
-        def _reply(self, payload_frames: bytes, status: int, msg: str = ""):
+        def handle(self):
+            if opens_with_preface(self.request):
+                _Conn(self.request, methods).run()
+            else:
+                super().handle()
+
+        def do_POST(self):
+            ln = int(self.headers.get("Content-Length", "0"))
+            body, status, msg = dispatch(methods, self.path, self.rfile.read(ln))
             trailer = f"grpc-status: {status}\r\n"
             if msg:
                 trailer += f"grpc-message: {msg}\r\n"
-            body = payload_frames + _frame(0x80, trailer.encode())
+            body += _frame(0x80, trailer.encode())
             self.send_response(200)
             self.send_header("Content-Type", _GRPC_WEB_CT)
             self.send_header("Content-Length", str(len(body)))
             self.end_headers()
             self.wfile.write(body)
-
-        def do_POST(self):
-            method = methods.get(self.path)
-            if method is None:
-                self._reply(b"", 12, "unknown method")  # UNIMPLEMENTED
-                return
-            ln = int(self.headers.get("Content-Length", "0"))
-            frames = unframe(self.rfile.read(ln))
-            data = b"".join(p for f, p in frames if f == 0)
-            try:
-                resp = method(data)
-            except Exception as e:  # UNKNOWN
-                self._reply(b"", 2, type(e).__name__)
-                return
-            self._reply(_frame(0, resp), 0)
 
     return ThreadingHTTPServer((host, port), Handler)
 
@@ -307,17 +327,20 @@ def grpc_web_call(host: str, port: int, entries: list[Mapping]) -> int:
         frames = unframe(r.read())
     finally:
         conn.close()
-    status = 0
+    trailers = {}
     written = 0
     for flags, payload in frames:
         if flags & 0x80:
             for line in payload.decode().splitlines():
-                if line.startswith("grpc-status:"):
-                    status = int(line.split(":", 1)[1].strip())
+                name, _, value = line.partition(":")
+                trailers[name] = value.strip()
         else:
             written = decode_batch_write_response(payload)
+    status = int(trailers.get("grpc-status", 0))
     if status != 0:
-        raise RuntimeError(f"grpc-status {status}")
+        raise RuntimeError(
+            f"grpc-status {status}: {trailers.get('grpc-message', '')}"
+        )
     return written
 
 

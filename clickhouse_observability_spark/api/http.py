@@ -371,16 +371,19 @@ class LogsApi:
     @staticmethod
     def _collect_with_timeout(df: DataFrame, timeout_s: int = QUERY_TIMEOUT_S):
         """30 s query budget (api.go:95-96) via an interruptible
-        collect on a tagged job group."""
+        collect on a job group of its own: cancelling it on timeout
+        must not touch concurrent requests' jobs."""
         import threading
+        import uuid
 
         result, error = [], []
 
         sc = df.sparkSession.sparkContext
+        group = f"api-query-{uuid.uuid4().hex}"
 
         def run():
             try:
-                sc.setLocalProperty("spark.jobGroup.id", "api-query")
+                sc.setLocalProperty("spark.jobGroup.id", group)
                 result.extend(df.collect())
             except Exception as e:  # pragma: no cover
                 error.append(e)
@@ -389,7 +392,7 @@ class LogsApi:
         t.start()
         t.join(timeout_s)
         if t.is_alive():
-            sc.cancelJobGroup("api-query")
+            sc.cancelJobGroup(group)
             raise ApiError(504, "query timeout")
         if error:
             raise error[0]

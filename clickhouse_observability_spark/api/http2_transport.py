@@ -16,13 +16,14 @@ their RFCs with stdlib only:
 - RFC 7540 framing: connection preface, SETTINGS/PING/WINDOW_UPDATE/
   GOAWAY handling, HEADERS(+CONTINUATION)/DATA with padding and
   priority fields, per-stream assembly, trailers.
-- gRPC-over-HTTP/2 semantics: POST :path routing, 5-byte
-  length-prefixed messages (the framing shared with grpc_transport),
-  `grpc-status` trailers, UNIMPLEMENTED for unknown methods.
+- gRPC-over-HTTP/2 semantics: per-stream `:path` + body handed to
+  `grpc_transport.dispatch` (the method table, 5-byte framing and
+  grpc-status mapping shared with gRPC-Web), `grpc-status` trailers.
 
-`serve_grpc_http2` is a real h2c socket server for LogService (unary
-BatchWrite); `grpc_http2_call` is the in-repo client that e2e-tests
-it over a genuine HTTP/2 exchange.
+There is no second listener: `grpc_transport.serve_grpc_web` peeks at
+each connection (`opens_with_preface`) and runs `_Conn` on the ones
+that open with the HTTP/2 preface. `grpc_http2_call` is the in-repo
+client that e2e-tests it over a genuine HTTP/2 exchange.
 """
 
 from __future__ import annotations
@@ -30,10 +31,15 @@ from __future__ import annotations
 import socket
 import struct
 import threading
+from collections.abc import Callable, Mapping
 
 from clickhouse_observability_spark.api.grpc_transport import (
-    LogServiceHandler,
+    METHOD_PATH,
+    _frame,
+    decode_batch_write_response,
+    dispatch,
     encode_batch_write_request,
+    unframe,
 )
 
 # ---------------------------------------------------------------------------
@@ -384,31 +390,28 @@ def _strip_padding(flags: int, payload: bytes, priority: bool) -> bytes:
 
 
 # ---------------------------------------------------------------------------
-# gRPC message framing (shared 5-byte prefix with grpc_transport)
+# server side: one h2c connection on the shared gRPC listener
 # ---------------------------------------------------------------------------
 
-def _grpc_frame(payload: bytes) -> bytes:
-    return b"\x00" + struct.pack(">I", len(payload)) + payload
+def opens_with_preface(sock: socket.socket) -> bool:
+    """Whether a new connection starts with the HTTP/2 preface. Only
+    peeks, so the bytes stay for whichever protocol then reads them."""
+    head = sock.recv(len(PREFACE), socket.MSG_PEEK)
+    if head and len(head) < len(PREFACE) and PREFACE.startswith(head):
+        # a preface split across segments: wait for all of it
+        head = sock.recv(len(PREFACE), socket.MSG_PEEK | socket.MSG_WAITALL)
+    return head == PREFACE
 
-
-def _grpc_unframe(body: bytes) -> list[bytes]:
-    out = []
-    pos = 0
-    while pos + 5 <= len(body):
-        length = struct.unpack(">I", body[pos + 1:pos + 5])[0]
-        out.append(bytes(body[pos + 5:pos + 5 + length]))
-        pos += 5 + length
-    return out
-
-
-# ---------------------------------------------------------------------------
-# server
-# ---------------------------------------------------------------------------
 
 class _Conn:
-    def __init__(self, sock: socket.socket, handler: LogServiceHandler):
+    """Serve one h2c connection until the peer leaves; the caller
+    closes the socket."""
+
+    def __init__(
+        self, sock: socket.socket, methods: Mapping[str, Callable[[bytes], bytes]]
+    ):
         self.sock = sock
-        self.handler = handler
+        self.methods = methods
         self.decoder = HpackDecoder()
         self.encoder = HpackEncoder()
         self.streams: dict[int, dict] = {}
@@ -420,8 +423,7 @@ class _Conn:
 
     def run(self) -> None:
         try:
-            if _read_exact(self.sock, len(PREFACE)) != PREFACE:
-                return
+            _read_exact(self.sock, len(PREFACE))  # the listener peeked it
             self._send(pack_frame(FT_SETTINGS, 0, 0, b""))
             while True:
                 ftype, flags, sid, payload = read_frame(self.sock)
@@ -476,44 +478,10 @@ class _Conn:
                     self._respond(sid, st)
         except (ConnectionError, OSError, ValueError):
             pass
-        finally:
-            try:
-                self.sock.close()
-            except OSError:
-                pass
 
     def _respond(self, sid: int, st: dict) -> None:
-        from clickhouse_observability_spark.api.grpc_reflection import (
-            REFLECTION_METHOD_PATH,
-            handle_reflection,
-        )
-
-        headers = dict(st["headers"])
-        path = headers.get(":path", "")
-        if path == "/logs.v1.LogService/BatchWrite":
-            try:
-                msgs = _grpc_unframe(st["data"])
-                resp = self.handler.batch_write(msgs[0] if msgs else b"")
-                self._send_response(sid, _grpc_frame(resp), 0, "")
-            except Exception as exc:  # INTERNAL
-                self._send_response(sid, b"", 13, str(exc))
-        elif path == "/" + REFLECTION_METHOD_PATH:
-            # reflection is a bidi stream; with the request fully
-            # buffered (END_STREAM seen) it degenerates to one
-            # response message per request message in a single DATA
-            # body — the same shape the gRPC-Web server uses
-            try:
-                body = b"".join(
-                    _grpc_frame(handle_reflection(m))
-                    for m in _grpc_unframe(st["data"])
-                )
-                self._send_response(sid, body, 0, "")
-            except Exception as exc:
-                self._send_response(sid, b"", 13, str(exc))
-        else:
-            self._send_response(sid, b"", 12, "unknown method")  # UNIMPLEMENTED
-
-    def _send_response(self, sid: int, body: bytes, status: int, msg: str) -> None:
+        path = dict(st["headers"]).get(":path", "")
+        body, status, msg = dispatch(self.methods, path, st["data"])
         resp_headers = self.encoder.encode(
             [(":status", "200"), ("content-type", "application/grpc")]
         )
@@ -528,40 +496,6 @@ class _Conn:
             FT_HEADERS, FLAG_END_HEADERS | FLAG_END_STREAM, sid, trailers
         )
         self._send(out)
-
-
-def serve_grpc_http2(
-    handler: LogServiceHandler, host: str = "127.0.0.1", port: int = 0
-):
-    """Start the h2c gRPC server; returns (stop_fn, bound_port)."""
-    srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-    srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-    srv.bind((host, port))
-    srv.listen(8)
-    bound_port = srv.getsockname()[1]
-    stopping = threading.Event()
-
-    def loop() -> None:
-        while not stopping.is_set():
-            try:
-                conn, _ = srv.accept()
-            except OSError:
-                return
-            threading.Thread(
-                target=_Conn(conn, handler).run, daemon=True
-            ).start()
-
-    thread = threading.Thread(target=loop, daemon=True)
-    thread.start()
-
-    def stop() -> None:
-        stopping.set()
-        try:
-            srv.close()
-        except OSError:
-            pass
-
-    return stop, bound_port
 
 
 # ---------------------------------------------------------------------------
@@ -597,7 +531,7 @@ def grpc_http2_call(
         sock.sendall(
             pack_frame(FT_HEADERS, FLAG_END_HEADERS, sid, req_headers)
             + pack_frame(
-                FT_DATA, FLAG_END_STREAM, sid, _grpc_frame(request_bytes)
+                FT_DATA, FLAG_END_STREAM, sid, _frame(0, request_bytes)
             )
         )
         dec = HpackDecoder()
@@ -623,8 +557,8 @@ def grpc_http2_call(
                     break
             elif ftype == FT_GOAWAY:
                 break
-        msgs = _grpc_unframe(body)
-        return (msgs[0] if msgs else b""), grpc_status, grpc_msg
+        msgs = unframe(body)
+        return (msgs[0][1] if msgs else b""), grpc_status, grpc_msg
     finally:
         try:
             sock.close()
@@ -636,15 +570,8 @@ def batch_write_http2(
     host: str, port: int, entries: list[dict], huffman: bool = False
 ) -> int:
     """BatchWrite over native HTTP/2; returns the accepted count."""
-    from clickhouse_observability_spark.api.grpc_transport import (
-        decode_batch_write_response,
-    )
-
     resp, status, msg = grpc_http2_call(
-        host,
-        port,
-        "/logs.v1.LogService/BatchWrite",
-        encode_batch_write_request(entries),
+        host, port, METHOD_PATH, encode_batch_write_request(entries),
         huffman=huffman,
     )
     if status != 0:

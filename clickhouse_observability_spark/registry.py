@@ -321,10 +321,7 @@ def _load_all() -> None:
         "lifecycle",
         "merge_engines",
     ):
-        try:
-            __import__(f"clickhouse_observability_spark.queries.{mod}")
-        except ImportError:
-            pass  # module lands in a later milestone
+        __import__(f"clickhouse_observability_spark.queries.{mod}")
     _LOADED = True
 
 

@@ -8,9 +8,11 @@ grpc GracefulStop (main.go:91-97).
 
 `EngineServer` is the Spark-native analog: the SparkSession stands in
 for the DB pool, `LogsTable.init_schema` is the DDL bootstrap, the
-Structured-Streaming `IngestStream` is the batcher, and the HTTP /
-gRPC-Web servers front the same two entry points. Graceful stop drains
-the stream (final flush, ST5) before stopping the transports.
+Structured-Streaming `IngestStream` is the batcher, and the HTTP and
+gRPC servers front the same two entry points. The one gRPC port
+serves stock `application/grpc` over h2c and gRPC-Web over HTTP/1.1.
+Graceful stop drains the stream (final flush, ST5) before stopping
+the transports.
 
 Env config surface (names 1:1 with main.go; DATA_DIR replaces
 DATABASE_URL since storage is a parquet path, not a DSN):
@@ -64,8 +66,6 @@ class EngineServer:
         self.stream: IngestStream | None = None
         self._http_server = None
         self._grpc_server = None
-        self._grpc_stop = None
-        self._grpc_port = None
         self._threads: list[threading.Thread] = []
 
     # -- lifecycle ------------------------------------------------------
@@ -101,28 +101,10 @@ class EngineServer:
         self._http_server = api.serve(*self.http_addr)
         # gRPC entry point: BatchWrite feeds the SAME batcher inbox
         # (service.go:21-47 enqueues; accepted-count reply).
-        # GRPC_TRANSPORT selects the wire flavor: "h2c" = native
-        # application/grpc over hand-rolled HTTP/2 (main.go:74-88
-        # parity, api/http2_transport), default = gRPC-Web framing
-        # over HTTP/1.1 (browser/proxy-friendly, the r2-r4 surface).
-        handler = LogServiceHandler(self.stream.submit_many)
-        if os.environ.get("GRPC_TRANSPORT", "web") == "h2c":
-            from clickhouse_observability_spark.api.http2_transport import (
-                serve_grpc_http2,
-            )
-
-            self._grpc_stop, self._grpc_port = serve_grpc_http2(
-                handler, *self.grpc_addr
-            )
-            self._grpc_server = None
-        else:
-            self._grpc_server = serve_grpc_web(handler, *self.grpc_addr)
-            self._grpc_stop = self._grpc_server.shutdown
-            self._grpc_port = self._grpc_server.server_address[1]
-        servers = [self._http_server]
-        if self._grpc_server is not None:
-            servers.append(self._grpc_server)
-        for srv in servers:
+        self._grpc_server = serve_grpc_web(
+            LogServiceHandler(self.stream.submit_many), *self.grpc_addr
+        )
+        for srv in (self._http_server, self._grpc_server):
             t = threading.Thread(target=srv.serve_forever, daemon=True)
             t.start()
             self._threads.append(t)
@@ -131,13 +113,16 @@ class EngineServer:
     @property
     def ports(self) -> tuple[int, int]:
         """(http_port, grpc_port) actually bound — for :0 ephemeral."""
-        return (self._http_server.server_address[1], self._grpc_port)
+        return (
+            self._http_server.server_address[1],
+            self._grpc_server.server_address[1],
+        )
 
     def stop(self) -> None:
         """Graceful stop (main.go:91-97): stop accepting, drain the
         batcher's final flush (ST5), then stop transports."""
-        if self._grpc_stop is not None:
-            self._grpc_stop()
+        if self._grpc_server is not None:
+            self._grpc_server.shutdown()
         if self.stream is not None:
             self.stream.stop(drain=True)  # final flush before exit
         if self._http_server is not None:

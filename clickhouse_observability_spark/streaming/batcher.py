@@ -40,12 +40,14 @@ from collections.abc import Iterable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType
 
 from clickhouse_observability_spark.schema import INGEST_SCHEMA
 from clickhouse_observability_spark.sources.writer import LogsTable, normalize_ingest
 
 DEFAULT_FLUSH_EVERY_MS = 100  # main.go:29 INGEST_MAX_DELAY_MS
 DEFAULT_FLUSH_SIZE = 500  # main.go:28 INGEST_BATCH_SIZE
+WRITE_PARTITIONS = 4  # write tasks per IngestStream micro-batch
 
 
 def _env_int(name: str, default: int) -> int:
@@ -57,7 +59,83 @@ def _env_int(name: str, default: int) -> int:
         return default
 
 
-class IngestStream:
+class FileFedStream:
+    """A JSONL inbox drained by one Structured Streaming query.
+
+    Producers publish wire rows as JSONL files into `inbox_dir`; every
+    `trigger_ms` the stream reads up to `max_files_per_trigger` of them
+    against the subclass's `schema` and hands the micro-batch to
+    `self._write_batch(batch_df, batch_id)`.
+    """
+
+    schema: StructType
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        inbox_dir: str,
+        checkpoint_dir: str,
+        max_files_per_trigger: int,
+        trigger_ms: int,
+    ):
+        self.spark = spark
+        self.inbox_dir = inbox_dir
+        self.checkpoint_dir = checkpoint_dir
+        self.max_files_per_trigger = max_files_per_trigger
+        self.trigger_ms = trigger_ms
+        self.query: StreamingQuery | None = None
+        os.makedirs(inbox_dir, exist_ok=True)
+
+    # -- producer side (ST4) -------------------------------------------
+    def submit_many(self, rows: Iterable[Mapping]) -> int:
+        """Enqueue a batch as one inbox file; returns the ACCEPTED
+        count immediately, before any flush happens (service.go:45-46
+        contract)."""
+        rows = list(rows)
+        if rows:
+            self._publish(rows)
+        return len(rows)
+
+    def _publish(self, rows: list[Mapping]) -> None:
+        name = uuid.uuid4().hex
+        tmp = os.path.join(self.inbox_dir, f".{name}.jsonl.tmp")
+        dst = os.path.join(self.inbox_dir, f"{name}.jsonl")
+        with open(tmp, "w") as f:
+            for r in rows:
+                f.write(json.dumps(dict(r)) + "\n")
+        os.rename(tmp, dst)  # atomic publish: the source never reads partials
+
+    # -- stream lifecycle (ST1/ST5) ------------------------------------
+    def start(self) -> StreamingQuery:
+        src = (
+            self.spark.readStream.schema(self.schema)
+            .option("maxFilesPerTrigger", self.max_files_per_trigger)
+            # Unparseable lines are rejected, not ingested as all-NULL
+            # rows — the analog of the reference gRPC layer refusing a
+            # malformed BatchWriteRequest before it reaches the batcher.
+            .option("mode", "DROPMALFORMED")
+            .json(self.inbox_dir)
+        )
+        self.query = (
+            src.writeStream.trigger(processingTime=f"{self.trigger_ms} milliseconds")
+            .option("checkpointLocation", self.checkpoint_dir)
+            .foreachBatch(self._write_batch)
+            .start()
+        )
+        return self.query
+
+    def stop(self, drain: bool = True) -> None:
+        """Graceful shutdown: final flush then stop (ST5; the
+        reference drains for 5 s, main.go:91-97)."""
+        if self.query is None:
+            return
+        if drain:
+            self.query.processAllAvailable()
+        self.query.stop()
+        self.query = None
+
+
+class IngestStream(FileFedStream):
     """File-fed streaming ingest into a LogsTable.
 
     Producers drop wire-format JSONL files into `inbox_dir` (the
@@ -66,6 +144,7 @@ class IngestStream:
     """
 
     MARKER_RETENTION = 1000  # committed-batch markers kept behind the head
+    schema = INGEST_SCHEMA
 
     def __init__(
         self,
@@ -79,7 +158,6 @@ class IngestStream:
         views: list | None = None,  # RollupView-likes, applied per batch
         maintain_indexes: bool = False,
         enforce_ttl_every_s: float | None = None,
-        write_partitions: int | None = None,
     ):
         """Knob defaults follow the reference's env-var config
         (cmd/server/main.go:25-29): INGEST_MAX_DELAY_MS -> trigger
@@ -87,15 +165,16 @@ class IngestStream:
         one batch, so maxFilesPerTrigger=4 caps a trigger at 4 batches
         — the reference's channel capacity, batcher.go:28). Explicit
         arguments win over env."""
-        self.spark = spark
-        self.table = table
-        self.inbox_dir = inbox_dir
-        self.checkpoint_dir = checkpoint_dir
-        self.flush_every_ms = (
+        super().__init__(
+            spark,
+            inbox_dir,
+            checkpoint_dir,
+            max_files_per_trigger,
             flush_every_ms
             if flush_every_ms is not None
-            else _env_int("INGEST_MAX_DELAY_MS", DEFAULT_FLUSH_EVERY_MS)
+            else _env_int("INGEST_MAX_DELAY_MS", DEFAULT_FLUSH_EVERY_MS),
         )
+        self.table = table
         # Clamp: INGEST_BATCH_SIZE=0 (or negative) would make the
         # submit_many chunking step raise on every call.
         self.flush_size = max(
@@ -103,30 +182,6 @@ class IngestStream:
             flush_size
             if flush_size is not None
             else _env_int("INGEST_BATCH_SIZE", DEFAULT_FLUSH_SIZE),
-        )
-        self.max_files_per_trigger = max_files_per_trigger
-        # Micro-batch write width (r13, guide §6): the file source
-        # hands foreachBatch one partition PER INBOX FILE, so a
-        # 16-file trigger of 500-row files wrote ~16 tasks x months
-        # tiny parquet files per batch — task-launch + commit-rename
-        # overhead per trigger AND a small-files at-rest layout that
-        # every later scan pays for. A micro-batch is bounded by
-        # flush_size x max_files_per_trigger rows, so a few write
-        # tasks are plenty at any deployment size; the knob stays
-        # env-tunable (INGEST_WRITE_PARTITIONS, 0 = keep source
-        # partitioning) for streams configured with huge triggers.
-        # NOTE (r14, advisor): coalesce has no shuffle boundary, so
-        # it narrows the WHOLE micro-batch — normalization, view and
-        # index maintenance included, not just the write. That is
-        # deliberate (the work is bounded by the batch cap above and
-        # one task chain beats a repartition shuffle per trigger),
-        # but a wide-cluster stream with heavy per-batch work should
-        # set INGEST_WRITE_PARTITIONS higher or 0 — the default is a
-        # bounded-batch sizing, not a cluster sizing.
-        self.write_partitions = (
-            write_partitions
-            if write_partitions is not None
-            else _env_int("INGEST_WRITE_PARTITIONS", 4)
         )
         self.views = list(views or ())
         self.maintain_indexes = bool(maintain_indexes)
@@ -144,55 +199,23 @@ class IngestStream:
         # the pass is retry-safe, including mid-directory-swap.
         self.enforce_ttl_every_s = enforce_ttl_every_s
         self._last_ttl_mono = 0.0
-        self.query: StreamingQuery | None = None
         # Committed-batches sidecar: one empty marker file per fully
         # committed micro-batch id. Lives NEXT TO the checkpoint (same
         # storage, same lifecycle — wiping the checkpoint resets batch
         # ids AND markers together; a production deployment puts both
         # on the shared DFS).
         self.committed_dir = os.path.join(checkpoint_dir, "committed_batches")
-        os.makedirs(inbox_dir, exist_ok=True)
         os.makedirs(self.committed_dir, exist_ok=True)
 
-    # -- producer side (ST4) -------------------------------------------
     def submit_many(self, rows: Iterable[Mapping]) -> int:
-        """Enqueue a batch; returns the ACCEPTED count immediately,
-        before any flush happens (service.go:45-46 contract). Large
-        submissions split into flush_size-row files so the per-trigger
-        file cap translates to the reference's entry-count batching."""
+        """Enqueue a batch; returns the ACCEPTED count immediately.
+        Large submissions split into flush_size-row files so the
+        per-trigger file cap translates to the reference's entry-count
+        batching."""
         rows = list(rows)
-        if not rows:
-            return 0
         for i in range(0, len(rows), self.flush_size):
-            chunk = rows[i:i + self.flush_size]
-            name = uuid.uuid4().hex
-            tmp = os.path.join(self.inbox_dir, f".{name}.jsonl.tmp")
-            dst = os.path.join(self.inbox_dir, f"{name}.jsonl")
-            with open(tmp, "w") as f:
-                for r in chunk:
-                    f.write(json.dumps(dict(r)) + "\n")
-            os.rename(tmp, dst)  # atomic publish: the source never reads partials
+            self._publish(rows[i:i + self.flush_size])
         return len(rows)
-
-    # -- stream lifecycle (ST1/ST5) ------------------------------------
-    def start(self) -> StreamingQuery:
-        src = (
-            self.spark.readStream.schema(INGEST_SCHEMA)
-            .option("maxFilesPerTrigger", self.max_files_per_trigger)
-            # Unparseable lines are rejected, not ingested as all-NULL
-            # rows — the analog of the reference gRPC layer refusing a
-            # malformed BatchWriteRequest before it reaches the batcher.
-            .option("mode", "DROPMALFORMED")
-            .json(self.inbox_dir)
-        )
-
-        self.query = (
-            src.writeStream.trigger(processingTime=f"{self.flush_every_ms} milliseconds")
-            .option("checkpointLocation", self.checkpoint_dir)
-            .foreachBatch(self._write_batch)
-            .start()
-        )
-        return self.query
 
     def _write_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """Synchronous, checkpointed, BATCH-ID-IDEMPOTENT append
@@ -204,8 +227,8 @@ class IngestStream:
         marker = os.path.join(self.committed_dir, str(int(batch_id)))
         if os.path.exists(marker):
             return
-        if self.write_partitions and self.write_partitions > 0:
-            batch_df = batch_df.coalesce(self.write_partitions)
+        # one task per inbox file would write that many tiny parquet files
+        batch_df = batch_df.coalesce(WRITE_PARTITIONS)
         normalized = normalize_ingest(batch_df)
         self.table.insert(normalized)
         # Materialized views (CH `CREATE MATERIALIZED VIEW` analogue):
@@ -267,13 +290,3 @@ class IngestStream:
 
                 if read_table_ttl_spec(self.table.path) is not None:
                     apply_retention(self.spark, self.table.path)
-
-    def stop(self, drain: bool = True) -> None:
-        """Graceful shutdown: final flush then stop (ST5; the
-        reference drains for 5 s, main.go:91-97)."""
-        if self.query is None:
-            return
-        if drain:
-            self.query.processAllAvailable()
-        self.query.stop()
-        self.query = None

@@ -35,17 +35,14 @@ admission a map-side join).
 
 from __future__ import annotations
 
-import json
 import os
-import uuid
-from collections.abc import Iterable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 
 from clickhouse_observability_spark.operators.text_analysis import fingerprint_md5
+from clickhouse_observability_spark.streaming.batcher import FileFedStream
 
 DOC_WIRE_SCHEMA = T.StructType(
     [
@@ -56,8 +53,10 @@ DOC_WIRE_SCHEMA = T.StructType(
 )
 
 
-class CorpusIngest:
+class CorpusIngest(FileFedStream):
     """File-fed streaming corpus ingestion with at-rest-index dedup."""
+
+    schema = DOC_WIRE_SCHEMA
 
     def __init__(
         self,
@@ -68,29 +67,11 @@ class CorpusIngest:
         max_files_per_trigger: int = 8,
         trigger_ms: int = 100,
     ):
-        self.spark = spark
+        super().__init__(
+            spark, inbox_dir, checkpoint_dir, max_files_per_trigger, trigger_ms
+        )
         self.docs_dir = os.path.join(corpus_dir, "docs")
         self.index_dir = os.path.join(corpus_dir, "_index", "fingerprints")
-        self.inbox_dir = inbox_dir
-        self.checkpoint_dir = checkpoint_dir
-        self.max_files_per_trigger = max_files_per_trigger
-        self.trigger_ms = trigger_ms
-        self.query: StreamingQuery | None = None
-        os.makedirs(inbox_dir, exist_ok=True)
-
-    # -- producer side --------------------------------------------------
-    def submit_many(self, docs: Iterable[Mapping]) -> int:
-        docs = list(docs)
-        if not docs:
-            return 0
-        name = uuid.uuid4().hex
-        tmp = os.path.join(self.inbox_dir, f".{name}.jsonl.tmp")
-        dst = os.path.join(self.inbox_dir, f"{name}.jsonl")
-        with open(tmp, "w") as f:
-            for d in docs:
-                f.write(json.dumps(dict(d)) + "\n")
-        os.rename(tmp, dst)  # atomic publish
-        return len(docs)
 
     # -- legacy layout migration ----------------------------------------
     def _migrate_legacy_layout(self) -> None:
@@ -127,7 +108,7 @@ class CorpusIngest:
             return None
         return self.spark.read.parquet(self.index_dir)
 
-    def _admit(self, batch_df: DataFrame, batch_id: int) -> None:
+    def _write_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         self._migrate_legacy_layout()
         fp = batch_df.withColumn("fp_md5", fingerprint_md5("text"))
         # within-batch keep-first: one winner per fingerprint
@@ -162,30 +143,6 @@ class CorpusIngest:
             .partitionBy("ingest_batch")
             .parquet(self.docs_dir)
         )
-
-    # -- stream lifecycle ----------------------------------------------
-    def start(self) -> StreamingQuery:
-        src = (
-            self.spark.readStream.schema(DOC_WIRE_SCHEMA)
-            .option("maxFilesPerTrigger", self.max_files_per_trigger)
-            .option("mode", "DROPMALFORMED")
-            .json(self.inbox_dir)
-        )
-        self.query = (
-            src.writeStream.trigger(processingTime=f"{self.trigger_ms} milliseconds")
-            .option("checkpointLocation", self.checkpoint_dir)
-            .foreachBatch(self._admit)
-            .start()
-        )
-        return self.query
-
-    def stop(self, drain: bool = True) -> None:
-        if self.query is None:
-            return
-        if drain:
-            self.query.processAllAvailable()
-        self.query.stop()
-        self.query = None
 
     def read(self) -> DataFrame:
         """The full current corpus (version column dropped — the

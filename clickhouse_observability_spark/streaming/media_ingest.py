@@ -27,15 +27,12 @@ table bucketable on the chunk key.
 from __future__ import annotations
 
 import base64
-import json
 import os
-import uuid
 from collections.abc import Iterable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 
 # the chunk-key derivation lives in operators/dedup.py: the at-rest
 # index durably stores those keys, so batch pairing and this probe
@@ -43,6 +40,7 @@ from pyspark.sql.streaming import StreamingQuery
 from clickhouse_observability_spark.operators.dedup import (
     pigeonhole_chunk_key as _chunk_key,
 )
+from clickhouse_observability_spark.streaming.batcher import FileFedStream
 
 MEDIA_WIRE_SCHEMA = T.StructType(
     [
@@ -53,9 +51,11 @@ MEDIA_WIRE_SCHEMA = T.StructType(
 )
 
 
-class MediaIngest:
+class MediaIngest(FileFedStream):
     """File-fed streaming media ingestion with at-rest perceptual
     (images) / exact (other kinds) dedup indexes."""
+
+    schema = MEDIA_WIRE_SCHEMA
 
     def __init__(
         self,
@@ -68,19 +68,15 @@ class MediaIngest:
         max_files_per_trigger: int = 8,
         trigger_ms: int = 100,
     ):
-        self.spark = spark
+        super().__init__(
+            spark, inbox_dir, checkpoint_dir, max_files_per_trigger, trigger_ms
+        )
         self.media_dir = os.path.join(store_dir, "media")
         self.phash_index_dir = os.path.join(store_dir, "_index", "phash_chunks")
         self.sha_index_dir = os.path.join(store_dir, "_index", "payload_sha")
-        self.inbox_dir = inbox_dir
-        self.checkpoint_dir = checkpoint_dir
         self.max_hamming = max_hamming
         self.n_chunks = max_hamming + 1
         self.fake_decode = fake_decode
-        self.max_files_per_trigger = max_files_per_trigger
-        self.trigger_ms = trigger_ms
-        self.query: StreamingQuery | None = None
-        os.makedirs(inbox_dir, exist_ok=True)
 
     # -- producer side --------------------------------------------------
     def submit_many(self, media: Iterable[Mapping]) -> int:
@@ -92,16 +88,7 @@ class MediaIngest:
             payload = d.pop("payload", b"") or b""
             d["payload_b64"] = base64.b64encode(bytes(payload)).decode()
             rows.append(d)
-        if not rows:
-            return 0
-        name = uuid.uuid4().hex
-        tmp = os.path.join(self.inbox_dir, f".{name}.jsonl.tmp")
-        dst = os.path.join(self.inbox_dir, f"{name}.jsonl")
-        with open(tmp, "w") as f:
-            for d in rows:
-                f.write(json.dumps(d) + "\n")
-        os.rename(tmp, dst)  # atomic publish
-        return len(rows)
+        return super().submit_many(rows)
 
     # -- admission ------------------------------------------------------
     def _read_index(self, path: str) -> DataFrame | None:
@@ -109,7 +96,7 @@ class MediaIngest:
             return None
         return self.spark.read.parquet(path)
 
-    def _admit(self, batch_df: DataFrame, batch_id: int) -> None:
+    def _write_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         from clickhouse_observability_spark.operators.multimodal import (
             image_phash,
         )
@@ -215,32 +202,6 @@ class MediaIngest:
         out = img_payloads.unionByName(other_payloads)
         if out.take(1):
             out.write.mode("append").parquet(self.media_dir)
-
-    # -- stream lifecycle ----------------------------------------------
-    def start(self) -> StreamingQuery:
-        src = (
-            self.spark.readStream.schema(MEDIA_WIRE_SCHEMA)
-            .option("maxFilesPerTrigger", self.max_files_per_trigger)
-            .option("mode", "DROPMALFORMED")
-            .json(self.inbox_dir)
-        )
-        self.query = (
-            src.writeStream.trigger(
-                processingTime=f"{self.trigger_ms} milliseconds"
-            )
-            .option("checkpointLocation", self.checkpoint_dir)
-            .foreachBatch(self._admit)
-            .start()
-        )
-        return self.query
-
-    def stop(self, drain: bool = True) -> None:
-        if self.query is None:
-            return
-        if drain:
-            self.query.processAllAvailable()
-        self.query.stop()
-        self.query = None
 
     def read(self) -> DataFrame:
         return self.spark.read.parquet(self.media_dir)

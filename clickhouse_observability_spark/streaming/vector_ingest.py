@@ -45,16 +45,14 @@ from __future__ import annotations
 
 import json
 import os
-import uuid
-from collections.abc import Iterable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 
 from clickhouse_observability_spark.operators import similarity as S
 from clickhouse_observability_spark.session import local_df
+from clickhouse_observability_spark.streaming.batcher import FileFedStream
 
 VEC_WIRE_SCHEMA = T.StructType(
     [
@@ -64,9 +62,11 @@ VEC_WIRE_SCHEMA = T.StructType(
 )
 
 
-class VectorIngest:
+class VectorIngest(FileFedStream):
     """File-fed streaming embedding ingestion with at-rest-index
     dedup and incremental ANN-index maintenance."""
+
+    schema = VEC_WIRE_SCHEMA
 
     def __init__(
         self,
@@ -80,7 +80,9 @@ class VectorIngest:
         trigger_ms: int = 100,
         neardup_hamming: int | None = None,
     ):
-        self.spark = spark
+        super().__init__(
+            spark, inbox_dir, checkpoint_dir, max_files_per_trigger, trigger_ms
+        )
         self.dim = dim
         self.n_clusters = n_clusters
         # optional SEMANTIC admission: reject vectors whose 64-bit BQ
@@ -98,26 +100,6 @@ class VectorIngest:
         self.chunks_dir = os.path.join(ix, "bq_chunks")
         self.means_dir = os.path.join(ix, "bq_means")
         self.meta_path = os.path.join(ix, "build_meta.json")
-        self.inbox_dir = inbox_dir
-        self.checkpoint_dir = checkpoint_dir
-        self.max_files_per_trigger = max_files_per_trigger
-        self.trigger_ms = trigger_ms
-        self.query: StreamingQuery | None = None
-        os.makedirs(inbox_dir, exist_ok=True)
-
-    # -- producer side --------------------------------------------------
-    def submit_many(self, vecs: Iterable[Mapping]) -> int:
-        vecs = list(vecs)
-        if not vecs:
-            return 0
-        name = uuid.uuid4().hex
-        tmp = os.path.join(self.inbox_dir, f".{name}.jsonl.tmp")
-        dst = os.path.join(self.inbox_dir, f"{name}.jsonl")
-        with open(tmp, "w") as f:
-            for v in vecs:
-                f.write(json.dumps(dict(v)) + "\n")
-        os.rename(tmp, dst)  # atomic publish
-        return len(vecs)
 
     # -- index build / rebuild ------------------------------------------
     def bootstrap(self, embeddings: DataFrame) -> None:
@@ -150,12 +132,12 @@ class VectorIngest:
         The stream must be stopped first: the rewrite derives from a
         snapshot read(), so a batch admitted between the snapshot and
         the overwrite would lose its index rows permanently, and a
-        concurrent _admit could read half-swapped centroid/means
+        concurrent _write_batch could read half-swapped centroid/means
         sidecars. Enforced, not documented-only."""
         if self.query is not None:
             raise RuntimeError(
                 "rebuild() requires the ingest stream to be stopped "
-                "(call stop() first): a concurrent _admit would race "
+                "(call stop() first): a concurrent _write_batch would race "
                 "the sidecar swap and lose its index rows"
             )
         emb = self.read()
@@ -220,7 +202,7 @@ class VectorIngest:
         self._frozen_cache = (key, (centroids, means))
         return centroids, means
 
-    def _admit(self, batch_df: DataFrame, batch_id: int) -> None:
+    def _write_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         v = F.col("embedding")
         # three-valued-logic trap: forall/isnan over a NULL element
         # yields NULL, not false, which would skip every when() branch
@@ -511,32 +493,6 @@ class VectorIngest:
             ).localCheckpoint(eager=True)
             migrated.write.mode("overwrite").parquet(self.chunks_dir)
         self._chunks_migrated = True
-
-    # -- stream lifecycle ----------------------------------------------
-    def start(self) -> StreamingQuery:
-        src = (
-            self.spark.readStream.schema(VEC_WIRE_SCHEMA)
-            .option("maxFilesPerTrigger", self.max_files_per_trigger)
-            .option("mode", "DROPMALFORMED")
-            .json(self.inbox_dir)
-        )
-        self.query = (
-            src.writeStream.trigger(
-                processingTime=f"{self.trigger_ms} milliseconds"
-            )
-            .option("checkpointLocation", self.checkpoint_dir)
-            .foreachBatch(self._admit)
-            .start()
-        )
-        return self.query
-
-    def stop(self, drain: bool = True) -> None:
-        if self.query is None:
-            return
-        if drain:
-            self.query.processAllAvailable()
-        self.query.stop()
-        self.query = None
 
     # -- read side ------------------------------------------------------
     def read(self) -> DataFrame:

@@ -104,6 +104,44 @@ def test_query_timeout_504_envelope(api, monkeypatch):
     assert status == 504 and body["error"] == "query timeout"
 
 
+def test_query_timeout_cancels_only_its_own_jobs(spark):
+    """Request B runs out of its budget while request A, with budget to
+    spare, runs over the same slow frame: B gets its 504 and A still
+    returns its rows (B's cancel must not reach A's jobs)."""
+    import time
+
+    from pyspark.sql import functions as F
+
+    from clickhouse_observability_spark.api.http import ApiError
+
+    @F.udf("long")
+    def slow(x):
+        import time
+
+        time.sleep(3)
+        return x
+
+    df = spark.range(2, numPartitions=2).select(slow("id").alias("id"))
+    got = {}
+
+    def request_a():
+        try:
+            got["rows"] = LogsApi._collect_with_timeout(df, 30)
+        except Exception as e:
+            got["error"] = e
+
+    a = threading.Thread(target=request_a)
+    a.start()
+    while not spark.sparkContext.statusTracker().getActiveJobsIds():
+        time.sleep(0.05)  # A's job is running before B starts
+    with pytest.raises(ApiError) as b:
+        LogsApi._collect_with_timeout(df, 0.5)
+    a.join(60)
+    assert b.value.status == 504
+    assert "error" not in got, got.get("error")
+    assert sorted(r.id for r in got["rows"]) == [0, 1]
+
+
 def test_execution_failure_500_envelope(api, monkeypatch):
     from clickhouse_observability_spark.api.http import LogsApi
 

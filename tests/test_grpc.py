@@ -1,7 +1,8 @@
 """gRPC BatchWrite transport tests (SURVEY.md §2.11; proto/log.proto:19-21).
 
-Codec round-trips + a live gRPC-Web e2e: socket client -> framed
-protobuf -> handler -> parquet logs table -> visible to query_logs.
+Codec round-trips + live e2e on one gRPC port, over gRPC-Web and over
+h2c: socket client -> framed protobuf -> handler -> parquet logs table
+-> visible to query_logs.
 """
 
 from __future__ import annotations
@@ -59,11 +60,11 @@ def test_wire_bytes_match_proto3_spec():
 
 
 # ---------------------------------------------------------------------------
-# live gRPC-Web e2e
+# live gRPC-Web e2e (the same server also answers h2c, see below)
 # ---------------------------------------------------------------------------
 
 @pytest.fixture()
-def grpc_web(spark, tmp_path):
+def grpc_server(spark, tmp_path):
     from clickhouse_observability_spark.sources.writer import LogsTable
 
     table = LogsTable(spark, str(tmp_path / "logs"))
@@ -78,10 +79,10 @@ def grpc_web(spark, tmp_path):
         server.shutdown()
 
 
-def test_grpc_web_end_to_end(spark, grpc_web):
+def test_grpc_web_end_to_end(spark, grpc_server):
     from clickhouse_observability_spark.operators.query_logs import query_logs
 
-    table, port = grpc_web
+    table, port = grpc_server
     entries, _ = G.canonical_example()
     entries = entries + [
         {"ts": "bad-timestamp", "service": "orders", "level": "ERROR",
@@ -106,15 +107,15 @@ def test_grpc_web_end_to_end(spark, grpc_web):
     assert bad[0]["ts"].year >= 2026
 
 
-def test_grpc_web_empty_batch(grpc_web):
-    _, port = grpc_web
+def test_grpc_web_empty_batch(grpc_server):
+    _, port = grpc_server
     assert G.grpc_web_call("127.0.0.1", port, []) == 0
 
 
-def test_grpc_web_unknown_method_unimplemented(grpc_web):
+def test_grpc_web_unknown_method_unimplemented(grpc_server):
     import http.client
 
-    _, port = grpc_web
+    _, port = grpc_server
     conn = http.client.HTTPConnection("127.0.0.1", port)
     conn.request("POST", "/logs.v1.LogService/Nope", body=b"",
                  headers={"Content-Type": "application/grpc-web+proto"})
@@ -180,10 +181,10 @@ def _reflection_call(port: int, request_bytes: bytes) -> bytes:
     return b"".join(p for f, p in frames if not f & 0x80)
 
 
-def test_reflection_list_services(grpc_web):
+def test_reflection_list_services(grpc_server):
     from clickhouse_observability_spark.api import grpc_reflection as R
 
-    _, port = grpc_web
+    _, port = grpc_server
     # ServerReflectionRequest{list_services: ""} = field 7, empty str
     resp = _reflection_call(port, G._len_field(7, b""))
     # list_services_response arm (field 6) with both service names
@@ -193,10 +194,10 @@ def test_reflection_list_services(grpc_web):
     assert R.REFLECTION_SERVICE_FULL.encode() in resp
 
 
-def test_reflection_file_containing_symbol(grpc_web):
+def test_reflection_file_containing_symbol(grpc_server):
     from clickhouse_observability_spark.api import grpc_reflection as R
 
-    _, port = grpc_web
+    _, port = grpc_server
     req = G._str_field(4, R.SERVICE_FULL)  # file_containing_symbol
     resp = _reflection_call(port, req)
     key, pos = G._decode_varint(resp, 0)
@@ -210,8 +211,8 @@ def test_reflection_file_containing_symbol(grpc_web):
     assert fdr[p2:p2 + l2] == R.FILE_DESCRIPTOR
 
 
-def test_reflection_unknown_symbol_not_found(grpc_web):
-    _, port = grpc_web
+def test_reflection_unknown_symbol_not_found(grpc_server):
+    _, port = grpc_server
     resp = _reflection_call(port, G._str_field(4, "nope.Nope"))
     key, _ = G._decode_varint(resp, 0)
     assert key >> 3 == 7  # error_response arm
@@ -347,27 +348,13 @@ def test_hpack_encoder_decoder_round_trip():
         assert H.HpackDecoder().decode(enc) == headers
 
 
-@pytest.fixture()
-def grpc_h2(spark, tmp_path):
-    from clickhouse_observability_spark.api import http2_transport as H
-    from clickhouse_observability_spark.sources.writer import LogsTable
-
-    table = LogsTable(spark, str(tmp_path / "logs"))
-    handler = G.LogServiceHandler(table.ingest_batch)
-    stop, port = H.serve_grpc_http2(handler, port=0)
-    try:
-        yield table, port
-    finally:
-        stop()
-
-
-def test_grpc_http2_end_to_end(spark, grpc_h2):
+def test_grpc_http2_end_to_end(spark, grpc_server):
     """A genuine HTTP/2 exchange: preface, SETTINGS, HPACK headers,
     DATA, trailers — canonical row lands queryable in parquet."""
     from clickhouse_observability_spark.api import http2_transport as H
     from clickhouse_observability_spark.operators.query_logs import query_logs
 
-    table, port = grpc_h2
+    table, port = grpc_server
     entries, _ = G.canonical_example()
     written = H.batch_write_http2("127.0.0.1", port, entries)
     assert written == 1
@@ -379,50 +366,72 @@ def test_grpc_http2_end_to_end(spark, grpc_h2):
     assert len(got) == 1 and got[0]["msg"] == "order pending"
 
 
-def test_grpc_http2_huffman_request_headers(grpc_h2):
+def test_grpc_http2_huffman_request_headers(grpc_server):
     """The server's HPACK decoder handles Huffman-coded request
     headers (what stock clients emit when shorter)."""
     from clickhouse_observability_spark.api import http2_transport as H
 
-    _, port = grpc_h2
+    _, port = grpc_server
     entries, _ = G.canonical_example()
     assert H.batch_write_http2("127.0.0.1", port, entries, huffman=True) == 1
 
 
-def test_grpc_http2_sequential_streams_one_connection(grpc_h2):
+def test_grpc_http2_sequential_streams_one_connection(grpc_server):
     """Two unary calls over separate connections + empty batch."""
     from clickhouse_observability_spark.api import http2_transport as H
 
-    _, port = grpc_h2
+    _, port = grpc_server
     entries, _ = G.canonical_example()
     assert H.batch_write_http2("127.0.0.1", port, entries) == 1
     assert H.batch_write_http2("127.0.0.1", port, []) == 0
 
 
-def test_grpc_http2_unknown_method_unimplemented(grpc_h2):
+def test_grpc_http2_unknown_method_unimplemented(grpc_server):
     from clickhouse_observability_spark.api import http2_transport as H
 
-    _, port = grpc_h2
+    _, port = grpc_server
     resp, status, msg = H.grpc_http2_call(
         "127.0.0.1", port, "/logs.v1.LogService/Nope", b""
     )
     assert status == 12 and resp == b""
 
 
-def test_grpc_http2_reflection_list_services(grpc_h2):
-    """Server reflection served over the native h2c transport too."""
+def test_grpc_http2_reflection_list_services(grpc_server):
+    """Server reflection answers on its stock :path over h2c too."""
     from clickhouse_observability_spark.api import grpc_reflection as R
     from clickhouse_observability_spark.api import http2_transport as H
 
-    _, port = grpc_h2
+    _, port = grpc_server
     # ListServices request: field 7 (list_services) = ""
     req = b"\x3a\x00"
     resp, status, _ = H.grpc_http2_call(
-        "127.0.0.1", port, "/" + R.REFLECTION_METHOD_PATH, req
+        "127.0.0.1", port, R.REFLECTION_METHOD_PATH, req
     )
     assert status == 0
     assert b"logs.v1.LogService" in resp
     assert R.REFLECTION_SERVICE_FULL.encode() in resp
+
+
+def test_handler_error_same_status_on_both_wire_flavors():
+    """One exception -> grpc-status mapping: a raising submit is
+    UNKNOWN (2) with the same message over gRPC-Web and over h2c."""
+    from clickhouse_observability_spark.api import http2_transport as H
+
+    def submit(rows):
+        raise ValueError("disk full")
+
+    server = G.serve_grpc_web(G.LogServiceHandler(submit), port=0)
+    port = server.server_address[1]
+    threading.Thread(target=server.serve_forever, daemon=True).start()
+    entries, _ = G.canonical_example()
+    try:
+        with pytest.raises(RuntimeError) as web:
+            G.grpc_web_call("127.0.0.1", port, entries)
+        with pytest.raises(RuntimeError) as h2c:
+            H.batch_write_http2("127.0.0.1", port, entries)
+    finally:
+        server.shutdown()
+    assert str(web.value) == str(h2c.value) == "grpc-status 2: ValueError"
 
 
 # Raw bytes of a stock-client-shaped h2c BatchWrite session, checked
@@ -455,22 +464,21 @@ GOLDEN_H2C_SESSION = bytes.fromhex(
 )
 
 
-def test_grpc_http2_golden_stock_client_transcript(spark, grpc_h2):
-    """Replay the golden session raw over a plain socket — no in-repo
-    HTTP/2 client involved on the send side — and assert the full
-    server conversation: PING ACK with the same opaque data, 200
-    response headers, a BatchWriteResponse{written=1} DATA body,
-    grpc-status 0 trailers, and the row landed queryable."""
+def _replay(port: int, *chunks: bytes) -> tuple[bytes | None, dict, bytes]:
+    """Send raw bytes in `chunks` (a pause between each) and read the
+    server's side of the conversation until the trailers: (PING ACK
+    payload, response headers + trailers, DATA body)."""
     import socket
-    import struct
+    import time
 
     from clickhouse_observability_spark.api import http2_transport as H
-    from clickhouse_observability_spark.operators.query_logs import query_logs
 
-    table, port = grpc_h2
     s = socket.create_connection(("127.0.0.1", port), timeout=10)
     try:
-        s.sendall(GOLDEN_H2C_SESSION)
+        for i, chunk in enumerate(chunks):
+            if i:
+                time.sleep(0.2)
+            s.sendall(chunk)
         dec = H.HpackDecoder()
         headers, body, ping_ack = [], b"", None
         while True:
@@ -485,8 +493,20 @@ def test_grpc_http2_golden_stock_client_transcript(spark, grpc_h2):
                 body += payload
     finally:
         s.close()
+    return ping_ack, dict(headers), body
+
+
+def test_grpc_http2_golden_stock_client_transcript(spark, grpc_server):
+    """Replay the golden session raw over a plain socket — no in-repo
+    HTTP/2 client involved on the send side — and assert the full
+    server conversation: PING ACK with the same opaque data, 200
+    response headers, a BatchWriteResponse{written=1} DATA body,
+    grpc-status 0 trailers, and the row landed queryable."""
+    from clickhouse_observability_spark.operators.query_logs import query_logs
+
+    table, port = grpc_server
+    ping_ack, hd, body = _replay(port, GOLDEN_H2C_SESSION)
     assert ping_ack == bytes(range(1, 9))
-    hd = dict(headers)
     assert hd[":status"] == "200"
     assert hd["content-type"] == "application/grpc"
     assert hd["grpc-status"] == "0"
@@ -498,3 +518,13 @@ def test_grpc_http2_golden_stock_client_transcript(spark, grpc_h2):
         level="WARN", user="jane.smith",
     ).collect()
     assert len(got) == 1 and got[0]["msg"] == "order pending"
+
+
+def test_grpc_http2_preface_split_across_segments(grpc_server):
+    """The listener tells h2c from gRPC-Web by the preface; a client
+    whose preface arrives in two TCP segments is still served h2c."""
+    _, port = grpc_server
+    _, hd, body = _replay(
+        port, GOLDEN_H2C_SESSION[:10], GOLDEN_H2C_SESSION[10:])
+    assert hd["grpc-status"] == "0"
+    assert body == b"\x00\x00\x00\x00\x02\x08\x01"

@@ -76,31 +76,37 @@ def test_graceful_stop_drains(spark, tmp_path):
     assert srv.table.read().count() == 7
 
 
-def test_server_native_h2c_transport(spark, tmp_path, monkeypatch):
-    """GRPC_TRANSPORT=h2c serves application/grpc over real HTTP/2:
-    the full lifecycle (bootstrap -> batcher -> h2c BatchWrite ->
-    drain -> rows queryable) with the hand-rolled transport."""
-    from clickhouse_observability_spark.api import grpc_transport as G
+def test_server_one_grpc_port_serves_both_wire_flavors(spark, tmp_path):
+    """The default server's one gRPC port takes a gRPC-Web BatchWrite,
+    an h2c BatchWrite and an h2c reflection call on the stock path;
+    both rows are readable after the graceful stop's drain."""
+    from clickhouse_observability_spark.api import grpc_reflection as R
     from clickhouse_observability_spark.api.http2_transport import (
         batch_write_http2,
+        grpc_http2_call,
     )
-    from clickhouse_observability_spark.server import EngineServer
 
-    monkeypatch.setenv("GRPC_TRANSPORT", "h2c")
     srv = EngineServer(
         spark,
         data_dir=str(tmp_path / "data"),
         http_addr="127.0.0.1:0",
         grpc_addr="127.0.0.1:0",
     ).start()
+    row = {"ts": "2025-09-01T20:05:00Z", "service": "orders",
+           "level": "WARN", "attrs": {}, "trace_id": "", "span_id": ""}
     try:
         _, grpc_port = srv.ports
-        entries, _ = G.canonical_example()
-        assert batch_write_http2("127.0.0.1", grpc_port, entries) == 1
+        assert grpc_web_call(
+            "127.0.0.1", grpc_port, [dict(row, msg="via grpc-web")]) == 1
+        assert batch_write_http2(
+            "127.0.0.1", grpc_port, [dict(row, msg="via h2c")]) == 1
+        resp, status, _ = grpc_http2_call(
+            "127.0.0.1", grpc_port, R.REFLECTION_METHOD_PATH, b"\x3a\x00")
+        assert status == 0 and R.SERVICE_FULL.encode() in resp
     finally:
         srv.stop()
-    rows = srv.table.read().collect()
-    assert len(rows) == 1 and rows[0]["msg"] == "order pending"
+    msgs = sorted(r["msg"] for r in srv.table.read().collect())
+    assert msgs == ["via grpc-web", "via h2c"]
 
 
 def test_stop_flushes_query_log_to_data_dir(spark, tmp_path):

@@ -51,7 +51,7 @@ def test_env_config_parity(spark, tmp_path, monkeypatch):
     monkeypatch.setenv("INGEST_MAX_DELAY_MS", "250")
     monkeypatch.setenv("INGEST_BATCH_SIZE", "3")
     s = IngestStream(spark, table, str(tmp_path / "in"), str(tmp_path / "ck"))
-    assert s.flush_every_ms == 250 and s.flush_size == 3
+    assert s.trigger_ms == 250 and s.flush_size == 3
     # batch-size chunking: 7 rows at size 3 -> 3 inbox files
     assert s.submit_many([_wire(i) for i in range(7)]) == 7
     files = [f for f in os.listdir(s.inbox_dir) if f.endswith(".jsonl")]
@@ -61,12 +61,12 @@ def test_env_config_parity(spark, tmp_path, monkeypatch):
         spark, table, str(tmp_path / "in2"), str(tmp_path / "ck2"),
         flush_every_ms=50, flush_size=10,
     )
-    assert s2.flush_every_ms == 50 and s2.flush_size == 10
+    assert s2.trigger_ms == 50 and s2.flush_size == 10
 
     monkeypatch.setenv("INGEST_MAX_DELAY_MS", "not-a-number")
     monkeypatch.delenv("INGEST_BATCH_SIZE")
     s3 = IngestStream(spark, table, str(tmp_path / "in3"), str(tmp_path / "ck3"))
-    assert s3.flush_every_ms == DEFAULT_FLUSH_EVERY_MS
+    assert s3.trigger_ms == DEFAULT_FLUSH_EVERY_MS
     assert s3.flush_size == DEFAULT_FLUSH_SIZE
 
     # INGEST_BATCH_SIZE=0 parses fine but would break the chunking
@@ -317,7 +317,7 @@ def test_media_ingest_online_neardup_admission(spark, tmp_path):
               __import__("base64").b64encode(M.encode_png(img_c)).decode())],
             "media_id long, kind string, payload_b64 string",
         )
-        mi._admit(batch, batch_id=999)
+        mi._write_batch(batch, batch_id=999)
         got = [r.media_id for r in mi.read().collect()]
         assert sorted(got) == [1, 3, 5, 10]  # still exactly once
     finally:
@@ -337,9 +337,9 @@ def test_corpus_versions_time_travel_and_diff(spark, tmp_path):
     b1 = spark.createDataFrame([mk(1), mk(2)], "doc_id long, text string, source string")
     b2 = spark.createDataFrame([mk(3), mk(2)], "doc_id long, text string, source string")
     b3 = spark.createDataFrame([mk(4)], "doc_id long, text string, source string")
-    ing._admit(b1, batch_id=0)
-    ing._admit(b2, batch_id=1)  # doc 2 deduped away
-    ing._admit(b3, batch_id=2)
+    ing._write_batch(b1, batch_id=0)
+    ing._write_batch(b2, batch_id=1)  # doc 2 deduped away
+    ing._write_batch(b3, batch_id=2)
     assert ing.versions() == [0, 1, 2]
     ids = lambda df: sorted(r.doc_id for r in df.collect())
     # each pinned version reproduces its exact prefix
@@ -351,7 +351,7 @@ def test_corpus_versions_time_travel_and_diff(spark, tmp_path):
     # catch-up delta between two pins
     assert ids(ing.diff(0, 2)) == [3, 4]
     # a fully-deduped retry commits no version directory
-    ing._admit(b1, batch_id=3)
+    ing._write_batch(b1, batch_id=3)
     assert ing.versions() == [0, 1, 2]
     # as-of read prunes newer partitions at the source (scan shows a
     # partition filter, not a post-scan filter over all files)
@@ -396,7 +396,7 @@ def test_corpus_legacy_flat_layout_migrates_to_version_zero(spark, tmp_path):
         ],
         "doc_id long, text string, source string",
     )
-    ing._admit(newb, batch_id=0)  # fresh checkpoint: first REAL batch is 0
+    ing._write_batch(newb, batch_id=0)  # fresh checkpoint: first REAL batch is 0
     ids = lambda df: sorted(r.doc_id for r in df.collect())
     assert ids(ing.read()) == [1, 2, 3]  # nothing lost, dup still rejected
     # legacy corpus became the -1 SENTINEL version — batch 0 cannot

@@ -123,10 +123,10 @@ def test_crash_retry_admits_nothing(spark, store):
     rows = [(500 + i, _vec(rnd)) for i in range(5)]
     rows.append((506, [0.0] * DIM))  # one quarantined row in the batch
     batch = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    vi._admit(batch, batch_id=1)
+    vi._write_batch(batch, batch_id=1)
     n1 = (vi.read().count(), vi.assignments().count(), vi.codes().count(),
           vi.rejected().count())
-    vi._admit(batch, batch_id=1)  # retry
+    vi._write_batch(batch, batch_id=1)  # retry
     n2 = (vi.read().count(), vi.assignments().count(), vi.codes().count(),
           vi.rejected().count())
     # quarantine must not double-count on retry either
@@ -197,7 +197,7 @@ def test_semantic_neardup_admission(spark, tmp_path):
         [(900, list(seed[3][1])), (901, mk())],
         "vec_id long, embedding array<double>",
     )
-    vi._admit(batch, batch_id=1)
+    vi._write_batch(batch, batch_id=1)
     ids = {r.vec_id for r in vi.read().select("vec_id").collect()}
     reasons = {r.vec_id: r.reject_reason for r in vi.rejected().collect()}
     assert 900 not in ids and reasons.get(900) == "near_duplicate"
@@ -205,7 +205,7 @@ def test_semantic_neardup_admission(spark, tmp_path):
     # within-batch semantic dedup: the same new payload under two new
     # ids in ONE batch -> smaller id wins
     v = mk()
-    vi._admit(spark.createDataFrame(
+    vi._write_batch(spark.createDataFrame(
         [(910, v), (911, list(v))], "vec_id long, embedding array<double>"
     ), batch_id=2)
     ids = {r.vec_id for r in vi.read().select("vec_id").collect()}
@@ -213,11 +213,11 @@ def test_semantic_neardup_admission(spark, tmp_path):
     # cross-batch: the batch-2 admit is now in the chunk index
     batch3 = spark.createDataFrame(
         [(920, list(v))], "vec_id long, embedding array<double>")
-    vi._admit(batch3, batch_id=3)
+    vi._write_batch(batch3, batch_id=3)
     assert 920 not in {r.vec_id for r in vi.read().select("vec_id").collect()}
     # retry of batch 3 is a no-op everywhere (incl. quarantine)
     before = (vi.read().count(), vi.rejected().count())
-    vi._admit(batch3, batch_id=3)
+    vi._write_batch(batch3, batch_id=3)
     assert (vi.read().count(), vi.rejected().count()) == before
 
 
@@ -252,7 +252,7 @@ def test_neardup_full_code_distance_beyond_64_dims(spark, tmp_path):
     tail_flipped = base[:64] + [-x for x in base[64:]]
     one_bit_w2 = list(base)
     one_bit_w2[100] = -one_bit_w2[100]
-    vi._admit(
+    vi._write_batch(
         spark.createDataFrame(
             [(800, tail_flipped), (801, one_bit_w2)],
             "vec_id long, embedding array<double>",
@@ -280,7 +280,7 @@ def test_neardup_within_batch_greedy_not_transitive(spark, tmp_path):
     a = sv()
     b = list(a); b[0] = -b[0]; b[1] = -b[1]          # 2 bits from a
     c = list(b); c[2] = -c[2]; c[3] = -c[3]          # 2 from b, 4 from a
-    vi._admit(
+    vi._write_batch(
         spark.createDataFrame(
             [(901, a), (902, b), (903, c)],
             "vec_id long, embedding array<double>",
@@ -332,7 +332,7 @@ def test_legacy_chunk_index_without_bq_migrates(spark, tmp_path):
         spark.read.parquet(vi.chunks_dir).drop("bq").localCheckpoint(eager=True)
     )
     legacy.write.mode("overwrite").parquet(vi.chunks_dir)
-    vi._admit(
+    vi._write_batch(
         spark.createDataFrame(
             [(700, list(seed[4][1])), (701, sv())],
             "vec_id long, embedding array<double>",
@@ -368,7 +368,7 @@ def test_legacy_chunk_index_dim_over_64_prefix_semantics(spark, tmp_path):
     # legacy index only attests the first 64 dims -> near-dup, reject
     prefix_dup = base[:64] + [-x for x in base[64:]]
     fresh = sv()
-    vi._admit(
+    vi._write_batch(
         spark.createDataFrame(
             [(600, prefix_dup), (601, fresh)],
             "vec_id long, embedding array<double>",
